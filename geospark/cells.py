@@ -103,12 +103,6 @@ def decode(cell: np.ndarray):
     return res, ix, iy
 
 
-def cell_center(cell: np.ndarray):
-    res, ix, iy = decode(cell)
-    size = WORLD / (1 << res).astype(np.float64)
-    return (ix + 0.5) * size - L, (iy + 0.5) * size - L
-
-
 def parent(cell: np.ndarray, steps: int = 1) -> np.ndarray:
     res, ix, iy = decode(cell)
     new_res = res - steps

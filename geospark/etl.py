@@ -15,6 +15,8 @@ kernel and the centroid kernel, both Arrow-vectorized.
 
 from __future__ import annotations
 
+import warnings
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType, StructField, StructType
@@ -63,7 +65,9 @@ def load_osm_tables(spark: SparkSession, fixture_dir: str) -> dict:
 
             schema = from_arrow_schema(pq.read_schema(path))
             t[name] = spark.read.schema(schema).parquet(path)
-        except Exception:
+        except Exception as exc:
+            warnings.warn(f"load_osm_tables: explicit schema for {name} failed "
+                          f"({exc!r}); falling back to Spark schema inference")
             t[name] = spark.read.parquet(path)
     return t
 
@@ -241,8 +245,8 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     bld = osm["osm_buildings"].filter(F.col("house_number") != "")
     bld = _centroid_cols(bld)
     bld_in_postal = bld.withColumn(
-        "__pippc", spatial.pip_match_col(spark, preps["pc"], "cx", "cy")
-    ).withColumn("p_postcode", F.explode("__pippc")).drop("__pippc").select(
+        "__pippc", spatial.multi_pip_match_col(spark, {"pc": preps["pc"]}, "cx", "cy")
+    ).withColumn("p_postcode", F.explode("__pippc.pc")).drop("__pippc").select(
         _id(F.lit("bld"), "osm_id", "p_postcode").alias("id"),
         "osm_id",
         F.lit("").alias("city"),
@@ -446,20 +450,18 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     # caller materializes all three anyway (sequentially: three scheduler
     # round-trips of mostly-idle executors at bench scale). Caching here
     # dedupes with callers' own .cache() via the CacheManager.
-    # GEOSPARK_EAGER_STRUCT=0 restores lazy output.
     import concurrent.futures as _fut
 
-    if _os.environ.get("GEOSPARK_EAGER_STRUCT", "1") != "0":
-        out = {k: v.cache() for k, v in out.items()}
+    out = {k: v.cache() for k, v in out.items()}
 
-        def _mat(kv):
-            k, v = kv
-            spark.sparkContext.setJobDescription(f"eager struct build: {k}")
-            v.count()
-            spark.sparkContext.setJobDescription(None)
+    def _mat(kv):
+        k, v = kv
+        spark.sparkContext.setJobDescription(f"eager struct build: {k}")
+        v.count()
+        spark.sparkContext.setJobDescription(None)
 
-        with _fut.ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_mat, out.items()))
+    with _fut.ThreadPoolExecutor(max_workers=3) as pool:
+        list(pool.map(_mat, out.items()))
     return out
 
 

@@ -15,9 +15,9 @@ the country branch (003:143-155), re-expressed per the north_star as a
      (house_number/postcode/city) are pure JVM array_intersect over trigram
      arrays PRECOMPUTED per side (GIN-index-as-data; never rebuilt inside
      join conditions).
-  3. the country restriction prefetches ONE polygon per distinct country
-     term driver-side (R1's loop-invariant hoisting -> broadcast scalar)
-     and applies vectorized PIP.
+  3. the country restriction resolves the batch's distinct country terms
+     driver-side into ONE prepared polygon set (R1's loop-invariant
+     hoisting -> broadcast) and probes it with the shared vectorized PIP.
   4. ranking: ORDER BY distance ASC NULLS LAST (Postgres ASC default —
      Spark needs asc_nulls_last, §7.4.2), then trigram distance, then stable
      tiebreaks; row_number() <= limit per query (O1).
@@ -29,13 +29,10 @@ reference either (its `%` on NULL yields no rows) — we filter such queries out
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import BooleanType
 
 from . import proj, spatial, text
-from .reverse import ZERO_UUID, _admin_cols
+from .reverse import ZERO_UUID, _admin_cols, _pack_candidates, _unpack_top1
 from .tables import GeocoderTables, sim_from_arrays, sim_ge_arrays, trigram_tokens_col
 
 RESULT_COLS = ["query_id", "house", "road", "house_number", "postcode", "city",
@@ -87,36 +84,27 @@ def _street_candidates(tables: GeocoderTables, road_terms: DataFrame) -> DataFra
             .distinct())
 
 
-def _country_filter_col(spark, tables: GeocoderTables, q: DataFrame):
-    """Per-row country PIP predicate with driver-prefetched polygons (R1).
-    Returns a closure column fn(x, y, country) -> bool; rows with NULL
-    country pass, rows whose country resolved to no polygon fail (ST_Within
-    against NULL is false)."""
-    countries = [r[0] for r in q.select("country").where("country is not null").distinct().collect()]
+def _country_filter(spark, tables: GeocoderTables, cand: DataFrame,
+                    cand_qs: DataFrame) -> DataFrame:
+    """Country containment (with-country variants 003:112,260,405) with
+    driver-prefetched polygons (R1): the batch's distinct country terms
+    (read from the persisted query x street candidates ``cand_qs``, not the
+    raw query plan, which may be an expensive page scan) resolve to ONE
+    prepared set whose attrs are the terms, probed once per row. Rows with
+    NULL country pass; rows whose term resolved to no polygon fail
+    (ST_Within against NULL is false): their term is in no match array."""
+    countries = [r[0] for r in cand_qs.select("country").where("country is not null")
+                 .distinct().collect()]
     if not countries:
         # batch-level constant folding (R4): no country terms in this batch
-        # -> no Arrow stage at all, the residual filter is a JVM no-op
-        return None
-    prepared = {c: tables.country_polygon(c) for c in countries}
-    bc = spark.sparkContext.broadcast(prepared)
-
-    @F.pandas_udf(BooleanType())
-    def _inside(x: pd.Series, y: pd.Series, country: pd.Series) -> pd.Series:
-        out = np.ones(len(x), dtype=bool)
-        xs = x.to_numpy(np.float64)
-        ys = y.to_numpy(np.float64)
-        cn = country.to_numpy(object)
-        for c in pd.unique(country.dropna()):
-            m = cn == c
-            prep = bc.value.get(c)
-            if prep is None:
-                out[m] = False
-            else:
-                matches = prep.match(xs[m], ys[m])
-                out[m] = np.array([len(v) > 0 for v in matches], dtype=bool)
-        return pd.Series(out)
-
-    return _inside
+        # -> no Arrow stage at all
+        return cand
+    pip = spatial.multi_pip_match_col(
+        spark, {"c": tables.country_polygons(countries)}, "x", "y")
+    return (cand.withColumn("__pip", pip)
+            .filter(F.col("country").isNull()
+                    | F.array_contains(F.col("__pip.c"), F.col("country")))
+            .drop("__pip"))
 
 
 def split_address_cols(df: DataFrame, term_col: str = "search_term",
@@ -329,8 +317,8 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     # partition — streaming it would funnel the whole pair generation
     # through one task; measured as a single 300 s task spilling 20 GB).
     # Exact pg_trgm sim verifies each join row via array_intersect over the
-    # carried arrays BEFORE the distinct — the old distinct-then-
-    # pair_similarity shape let Catalyst push the filter below the agg,
+    # carried arrays BEFORE the distinct — the old distinct-then-verify
+    # shape over raw strings let Catalyst push the filter below the agg,
     # rebuilding trigrams per pair row (profiled: 366 of 485 CPU-s of
     # geocode_pages at sf1.0 — the scaling bottleneck).
     # sim_ge_arrays, not sim_from_arrays >= tau: the filter lands in the
@@ -387,9 +375,7 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
             + (F.col("y") - F.col("cy")) * (F.col("y") - F.col("cy")))))
     cand = cand.filter(F.col("cx").isNull() | (F.col("distance") <= F.col("radius")))
 
-    # P4: country containment (with-country variants 003:112,260,405) —
-    # the driver-side country prefetch (R1) scans the PERSISTED candidate
-    # table, not the raw query plan (which may be an expensive page scan)
+    # P4: country containment
     if batch_has_countries is False:
         # caller promised a country-free batch (skipping the eager prefetch
         # collect); make the promise fail-SAFE rather than silently wrong —
@@ -397,12 +383,8 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
         # ST_Within against an unresolved polygon also yields no rows), and
         # the filter is a JVM no-op for correct callers
         cand = cand.filter(F.col("country").isNull())
-        inside_udf = None
     else:
-        inside_udf = _country_filter_col(spark, tables, cand_qs)
-    if inside_udf is not None:
-        cand = cand.filter(F.col("country").isNull()
-                           | inside_udf(F.col("x"), F.col("y"), F.col("country")))
+        cand = _country_filter(spark, tables, cand, cand_qs)
 
     # pre-rank houses to `limit` per query BEFORE the admin PIP join: the
     # PIP left-join only duplicates rows of a house (it never reorders across
@@ -410,23 +392,14 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     # top-`limit` houses in this pre-admin ordering — provably identical
     # results while bounding the PIP/window input to limit×queries rows
     if scalar_limit == 1:
-        # pack the candidate rows for the partial sort (the same two levers
-        # as reverse._pack_candidates, guide §2.3): project away columns
-        # dead after this point (country/cx/cy/radius/limit — the residual
-        # filters above already consumed them) and carry the two sha256 hex
-        # ids as BINARY(32) (unhex is exact and order-monotone for the
-        # lowercase-hex etl._id keys, so the min_by tiebreak on id picks
-        # the same winner — pytest-pinned). ~232 -> ~144 B per sorted row.
-        cand = cand.select(
-            "query_id", F.unhex(F.col("id")).alias("id"),
-            F.unhex(F.col("street_id")).alias("street_id"),
-            "house_number", "x", "y", "distance", "trgm_dist")
-        cand = _top1_forward(cand, with_admin=False)
-        # restore hex ids (≤1 row per query from here on): the post-PIP
-        # re-aggregation tiebreaks on id again (hex order == binary order),
-        # and the decorate join below keys on the hex street_id.
-        cand = cand.withColumn("id", F.lower(F.hex("id"))) \
-            .withColumn("street_id", F.lower(F.hex("street_id")))
+        # pack the candidate rows for the partial sort (reverse's skinny,
+        # binary-id pack plus trgm_dist): the country/cx/cy/radius/limit
+        # columns are dead here — the residual filters above consumed them.
+        # ~232 -> ~144 B per sorted row. The ids come back as hex (≤1 row
+        # per query from here on) for the post-PIP re-aggregation tiebreak
+        # and the decorate join on street_id.
+        cand = _unpack_top1(_top1_forward(_pack_candidates(cand, "trgm_dist"),
+                                          with_admin=False))
     else:
         pre_w = Window.partitionBy("query_id").orderBy(
             F.col("distance").asc_nulls_last(), F.col("trgm_dist").asc(), F.col("id").asc())

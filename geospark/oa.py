@@ -196,7 +196,8 @@ def update_city_names_from_osm(spark, oa: dict, admin: DataFrame,
     rows = admin.filter(F.col("admin_level") == 8).select("osm_id", "name", "rings").collect()
     prep = spatial.prepare_from_rows(rows)
     filled = centroids.withColumn(
-        "new_city", F.get(spatial.pip_match_col(spark, prep, "cx", "cy"), 0)
+        "new_city", F.get(spatial.multi_pip_match_col(
+            spark, {"a8": prep}, "cx", "cy").getField("a8"), 0)
     ).filter(F.col("new_city").isNotNull()).select("cid", "new_city")
     return (
         oa_city.join(F.broadcast(filled), oa_city["id"] == filled["cid"], "left")

@@ -149,6 +149,6 @@ def zonal_stats(spark, raster: DataFrame, polys: DataFrame, res: int,
     prep = spatial.prepare_from_rows(rows, id_key=id_key, attr_key="__attr",
                                      rings_key=rings_key)
     r = r.withColumn("zone", F.explode(
-        spatial.pip_match_col(spark, prep, "__cx", "__cy")))
+        spatial.multi_pip_match_col(spark, {"zone": prep}, "__cx", "__cy").getField("zone")))
     return (r.groupBy("zone")
             .agg(F.count("*").alias("n_cells"), F.sum("n").alias("n_points")))

@@ -20,37 +20,16 @@ itself, and the query side is the small one (broadcastable).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, LongType
 
-from . import cells as cell_mod
 from . import proj, spatial
-from .etl import GRID_JOIN_RES, HOUSE_CELL_RES
+from .etl import GRID_JOIN_RES
 from .tables import GeocoderTables
 
 ZERO_UUID = "00000000-0000-0000-0000-000000000000"
 
 RESULT_COLS = ["query_id", "house", "road", "house_number", "postcode", "city",
                "county", "state", "x", "y", "distance", "license_id"]
-
-
-def covering_cells_col(x_col, y_col, radius_col, res: int = HOUSE_CELL_RES):
-    """Array of Morton cell ids covering the radius window (Arrow kernel) —
-    kept for cell_id-keyed consumers; the reverse join itself uses the pure
-    JVM (ix, iy) grid expansion below."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cov(x: pd.Series, y: pd.Series, r: pd.Series) -> pd.Series:
-        xs = x.to_numpy(np.float64)
-        ys = y.to_numpy(np.float64)
-        rs = r.to_numpy(np.float64)
-        return pd.Series(
-            [c.tolist() for c in cell_mod.covering_cells_bbox(xs - rs, ys - rs, xs + rs, ys + rs, res)]
-        )
-
-    return _cov(x_col, y_col, radius_col)
 
 
 def _grid_expand(q: DataFrame, res: int = GRID_JOIN_RES,
@@ -222,7 +201,7 @@ def _top1_per_query(cand: DataFrame) -> DataFrame:
     return cand.groupBy("query_id").agg(best).select("query_id", "__best.*")
 
 
-def _pack_candidates(cand: DataFrame) -> DataFrame:
+def _pack_candidates(cand: DataFrame, *extra: str) -> DataFrame:
     """Skinny, binary-keyed candidate rows for the top-1 partial
     SortAggregate (guide §2.3: move fewer bytes — here the bytes are
     partition-locally SORTED, and at scale spilled: the sf8 root-cause was
@@ -240,12 +219,15 @@ def _pack_candidates(cand: DataFrame) -> DataFrame:
       struct(distance, binary id) picks the SAME winner as the hex form
       (pytest-pinned, test_top1_binary_key_order_equivalence).
 
+    ``extra`` names further payload columns the caller's top-1 key or
+    output needs (forward adds ``trgm_dist``).
+
     UnsafeRow arithmetic: 11 fields * 8 B + 64 + 64 + ~8 (hn) = ~232 B/row
     before; 7 * 8 + 32 + 32 + 8 = ~136 B/row after (−41% sorted bytes)."""
     return cand.select(
         "query_id", F.unhex("id").alias("id"),
         F.unhex("street_id").alias("street_id"),
-        "house_number", "x", "y", "distance")
+        "house_number", "x", "y", "distance", *extra)
 
 
 def _unpack_top1(df: DataFrame) -> DataFrame:

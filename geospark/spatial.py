@@ -9,8 +9,9 @@ thousands of rows even planet-wide, vs 10^9..10^12 points):
      cell-grid index (cell id -> candidate polygon ids) — the "prepared
      geometry" of the north_star,
   2. broadcast the prepared payload,
-  3. a vectorized pandas UDF maps point batches to the ARRAY of matching
-     polygon attributes (deterministically ordered by osm_id),
+  3. ONE vectorized pandas UDF (``multi_pip_match_col``) maps point batches
+     to the ARRAY of matching polygon attributes per prepared set
+     (deterministically ordered by osm_id),
   4. ``explode`` / ``explode_outer`` recovers inner/left join semantics
      INCLUDING row multiplicity for overlapping polygons (§7.4.7).
 
@@ -112,23 +113,6 @@ def prepare_from_rows(rows, id_key="osm_id", attr_key="name", rings_key="rings")
     return PreparedPolygons(polys)
 
 
-def pip_match_col(spark, prepared: PreparedPolygons, x_col: str, y_col: str,
-                  attr_type: str = "string"):
-    """Returns a pandas-UDF Column: array of matched attrs per point."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, LongType, StringType
-
-    bc = spark.sparkContext.broadcast(prepared)
-    out_type = ArrayType(StringType() if attr_type == "string" else LongType())
-
-    @F.pandas_udf(out_type)
-    def _pip(x: pd.Series, y: pd.Series) -> pd.Series:
-        res = bc.value.match(x.to_numpy(np.float64), y.to_numpy(np.float64))
-        return pd.Series(res)
-
-    return _pip(F.col(x_col), F.col(y_col))
-
-
 def multi_pip_match_col(spark, prepared_by_key: dict, x_col: str, y_col: str):
     """One Arrow pass matching the same (x, y) against SEVERAL prepared
     polygon sets: returns a struct column with one array<string> field per
@@ -155,7 +139,8 @@ def multi_pip_match_col(spark, prepared_by_key: dict, x_col: str, y_col: str):
 def pip_join(spark, points_df, polys_df, x_col="x", y_col="y",
              id_key="osm_id", attr_key="name", rings_key="rings",
              how="left", out_col="pip_attr"):
-    """Generic point-in-polygon join (J3/J4/J5).
+    """Generic point-in-polygon join (J3/J4/J5) emitting ``attr_key`` as a
+    string column.
 
     ``how='left'`` keeps unmatched points with NULL attr (LEFT JOIN ... ON
     ST_Contains); ``how='inner'`` drops them. Overlapping polygons duplicate
@@ -164,7 +149,7 @@ def pip_join(spark, points_df, polys_df, x_col="x", y_col="y",
 
     rows = polys_df.select(id_key, attr_key, rings_key).collect()
     prepared = prepare_from_rows(rows, id_key, attr_key, rings_key)
-    attr_type = "string" if isinstance(prepared.attrs[0] if prepared.attrs else "", str) else "long"
-    matched = points_df.withColumn("__pip", pip_match_col(spark, prepared, x_col, y_col, attr_type))
+    matched = points_df.withColumn(
+        "__pip", multi_pip_match_col(spark, {"m": prepared}, x_col, y_col))
     explode = F.explode_outer if how == "left" else F.explode
-    return matched.withColumn(out_col, explode("__pip")).drop("__pip")
+    return matched.withColumn(out_col, explode("__pip.m")).drop("__pip")

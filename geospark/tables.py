@@ -9,9 +9,10 @@ OpenAddresses tables. Everything query functions need, built once.
 
 from __future__ import annotations
 
-import pandas as pd
+import concurrent.futures
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from . import spatial, text
 
@@ -55,48 +56,25 @@ def sim_ge_arrays(ta, tb):
     intersect (an OpenHashSet build per evaluation, the dominant cost of
     the hn value-space join: 137.6M evaluations at bench sf4, 95% rejected)
     ran twice per probed pair. Rearranged over the rationals with
-    tau = 3/10:  shared/(na+nb-shared) >= 3/10
-             <=> 13*shared >= 3*(na+nb)   [union > 0 given na,nb > 0]
-    which references `shared` once. Exact vs the double-arithmetic form:
+    tau = p/q (the threshold's decimal literal as an exact fraction):
+             shared/(na+nb-shared) >= p/q
+         <=> (p+q)*shared >= p*(na+nb)   [union > 0 given na,nb > 0]
+    which references `shared` once; at tau = 3/10 that is
+    13*shared >= 3*(na+nb). Exact vs the double-arithmetic form at 3/10:
     verified exhaustively for all (shared, na, nb) up to 200 (trigram
     arrays are far smaller) — no float ratio s/u with u <= 400 can fall
     between double(0.3) and rational 3/10 (interval width ~1.1e-17).
     The empty-side guard mirrors sim_from_arrays' explicit 0.0 (< tau)."""
-    assert abs(text.TRGM_SIM_THRESHOLD - 0.3) < 1e-12, \
-        "rational rearrangement is derived for tau = 3/10"
+    tau = Fraction(str(text.TRGM_SIM_THRESHOLD))
+    p, q = tau.numerator, tau.denominator
     shared = F.size(F.array_intersect(ta, tb))
     return (F.size(ta) > 0) & (F.size(tb) > 0) \
-        & (shared * F.lit(13) >= (F.size(ta) + F.size(tb)) * F.lit(3))
-
-
-def pair_similarity_col(a_col, b_col):
-    """Column: pairwise pg_trgm similarity of two string columns — the
-    residual ``%`` predicates on already-pruned candidate pairs
-    (house_number/postcode/city terms, 003-forward_geocoding.sql:58,261,347).
-    Pure JVM: shared/(|A|+|B|-shared) over trigram arrays."""
-    ta = trigram_tokens_col(a_col)
-    tb = trigram_tokens_col(b_col)
-    shared = F.size(F.array_intersect(ta, tb))
-    union = F.size(ta) + F.size(tb) - shared
-    return F.when((F.size(ta) == 0) | (F.size(tb) == 0), F.lit(0.0)) \
-        .otherwise(shared.cast("double") / union)
-
-
-def pair_similarity_udf_col(a_col, b_col):
-    """Arrow-batched kernel variant of pair_similarity_col (kept as the
-    reference implementation; tests assert JVM == kernel)."""
-
-    @F.pandas_udf("double")
-    def _sim(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([text.similarity(x or "", y or "") for x, y in zip(a, b)])
-
-    return _sim(a_col, b_col)
+        & (shared * F.lit(p + q) >= (F.size(ta) + F.size(tb)) * F.lit(p))
 
 
 class GeocoderTables:
     def __init__(self, spark: SparkSession, struct: dict, osm_admin: DataFrame,
-                 oa: dict | None = None, wordlist: DataFrame | None = None,
-                 cache: bool = True):
+                 oa: dict | None = None, wordlist: DataFrame | None = None):
         self.spark = spark
         self.houses = struct["struct_house"]
         self.streets = struct["struct_streets"]
@@ -205,63 +183,55 @@ class GeocoderTables:
             for r in by_level.get(2, [])
         ]
 
-        if cache:
-            self.houses = self.houses.cache()
-            self.street_city = self.street_city.cache()
-            self.street_gram_df = self.street_gram_df.cache()
-            self.street_name_prefix = self.street_name_prefix.cache()
-            self.hn_gram_df = self.hn_gram_df.cache()
-            self.hn_value_prefix = self.hn_value_prefix.cache()
-            self.houses_ranked = self.houses_ranked.cache()
-            # Eager CONCURRENT materialization (guide §2.6): every consumer
-            # touches all of these, and materializing them one .count() at a
-            # time was ~10 sequential scheduler round-trips of a mostly-idle
-            # local[32] (r6 etl profile: ~3.5 s of the 19.5 s etl_build).
-            # Chains keep cache dependencies ordered (the prefix indexes
-            # join their own gram-df), independent chains overlap.
-            # GEOSPARK_EAGER_TABLES=0 restores lazy caches.
-            import os as _os
+        self.houses = self.houses.cache()
+        self.street_city = self.street_city.cache()
+        self.street_gram_df = self.street_gram_df.cache()
+        self.street_name_prefix = self.street_name_prefix.cache()
+        self.hn_gram_df = self.hn_gram_df.cache()
+        self.hn_value_prefix = self.hn_value_prefix.cache()
+        self.houses_ranked = self.houses_ranked.cache()
+        # Eager CONCURRENT materialization (guide §2.6): every consumer
+        # touches all of these, and materializing them one .count() at a
+        # time was ~10 sequential scheduler round-trips of mostly-idle
+        # executors (r6 etl profile: ~3.5 s of the 19.5 s etl_build).
+        # Chains keep cache dependencies ordered (the prefix indexes
+        # join their own gram-df), independent chains overlap.
+        chains = [
+            ("houses", (self.houses,)),
+            ("street_city", (self.street_city,)),
+            ("street_grams", (self.street_gram_df, self.street_name_prefix)),
+            ("hn_grams", (self.hn_gram_df, self.hn_value_prefix)),
+            ("houses_ranked", (self.houses_ranked,)),
+        ]
 
-            if _os.environ.get("GEOSPARK_EAGER_TABLES", "1") != "0":
-                import concurrent.futures as _fut
+        def _mat(named):
+            name, chain = named
+            spark.sparkContext.setJobDescription(f"eager tables build: {name}")
+            for df in chain:
+                df.count()
+            spark.sparkContext.setJobDescription(None)
 
-                chains = [
-                    ("houses", (self.houses,)),
-                    ("street_city", (self.street_city,)),
-                    ("street_grams", (self.street_gram_df, self.street_name_prefix)),
-                    ("hn_grams", (self.hn_gram_df, self.hn_value_prefix)),
-                    ("houses_ranked", (self.houses_ranked,)),
-                ]
-
-                def _mat(named):
-                    name, chain = named
-                    spark.sparkContext.setJobDescription(f"eager tables build: {name}")
-                    for df in chain:
-                        df.count()
-                    spark.sparkContext.setJobDescription(None)
-
-                with _fut.ThreadPoolExecutor(max_workers=len(chains)) as pool:
-                    list(pool.map(_mat, chains))
+        with concurrent.futures.ThreadPoolExecutor(max_workers=len(chains)) as pool:
+            list(pool.map(_mat, chains))
 
     def prepared_admin(self, level: int) -> spatial.PreparedPolygons:
         return self._prepared[level]
 
-    def country_polygon(self, name: str):
-        """_geocode_get_country_polygon (003-forward_geocoding.sql:6-14):
-        trigram match of the country term against admin_level-2 names.
-        The reference returns an arbitrary matching row; we take
-        argmax(similarity) with (name, osm_id) tiebreak (§7.4.3b).
-        Returns PreparedPolygons with one polygon, or None when nothing
-        passes the % threshold (-> ST_Within against NULL -> no rows)."""
-        best = None
-        for r in self.admin2_rows:
-            sim = text.similarity(r["name"], name)
-            if sim >= text.TRGM_SIM_THRESHOLD:
-                key = (-sim, r["name"], r["osm_id"])
-                if best is None or key < best[0]:
-                    best = (key, r)
-        if best is None:
-            return None
-        r = best[1]
-        return spatial.PreparedPolygons([(r["osm_id"], r["name"],
-                                          spatial.geometry.as_rings(r["rings"]))])
+    def country_polygons(self, names) -> spatial.PreparedPolygons:
+        """_geocode_get_country_polygon (003-forward_geocoding.sql:6-14)
+        for a batch of country terms, as ONE prepared set: each term's
+        polygon is the trigram match of the term against admin_level-2
+        names. The reference returns an arbitrary matching row; we take
+        argmax(similarity) with (name, osm_id) tiebreak (§7.4.3b). Every
+        resolved polygon is entered once per term with the TERM as its
+        attr, so a point's match array lists exactly the terms whose
+        polygon contains it. A term that passes no name's % threshold adds
+        nothing (-> ST_Within against NULL -> no rows)."""
+        polys = []
+        for name in names:
+            hits = [(sim, r) for r in self.admin2_rows
+                    if (sim := text.similarity(r["name"], name)) >= text.TRGM_SIM_THRESHOLD]
+            if hits:
+                _, r = min(hits, key=lambda h: (-h[0], h[1]["name"], h[1]["osm_id"]))
+                polys.append((r["osm_id"], name, spatial.geometry.as_rings(r["rings"])))
+        return spatial.PreparedPolygons(polys)

@@ -2,6 +2,7 @@
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -29,6 +30,42 @@ def test_content_derived_ids_are_stable(geo):
     """§7.4.3a: ids are pure functions of content (rerun-reproducible)."""
     for r in geo["struct"]["struct_cities"].select("id", "name", "postcode").collect():
         assert r.id == hashlib.sha256(f"city{r.name}{r.postcode}".encode()).hexdigest()
+
+
+def test_struct_ids_are_lowercase_sha256_hex(geo):
+    """The top-1 paths carry ``id``/``street_id`` as unhex()'d BINARY(32)
+    (reverse._pack_candidates): unhex turns a non-hex id into NULL, which
+    would silently reorder min_by winners. Pin the contract the pack relies
+    on: every id is 64 lowercase hex digits (street_id is NULL only for
+    orphan houses, which never reach the pack)."""
+    hex64 = "^[0-9a-f]{64}$"
+    for name, df in geo["struct"].items():
+        assert df.filter(F.col("id").isNull() | ~F.col("id").rlike(hex64)).count() == 0, name
+        if "street_id" in df.columns:
+            assert df.filter(~F.col("street_id").rlike(hex64)).count() == 0, name
+
+
+def test_load_osm_tables_warns_on_schema_fallback(spark, monkeypatch):
+    """When the parquet footer cannot be read driver-side, load_osm_tables
+    still loads every table via Spark schema inference — but says so."""
+    import pyarrow.parquet as pq
+
+    from geospark import etl
+    from geospark.fixtures import FIXTURE_DIR
+
+    def _boom(path):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(pq, "read_schema", _boom)
+    with pytest.warns(UserWarning, match="footer unreadable") as rec:
+        t = etl.load_osm_tables(spark, FIXTURE_DIR)
+    warned = " ".join(str(w.message) for w in rec)
+    for name in ("osm_admin", "osm_postal_code", "osm_roads",
+                 "osm_house_number", "osm_buildings"):
+        assert name in warned
+        want = spark.read.parquet(f"{FIXTURE_DIR}/{name}.parquet")
+        assert t[name].schema == want.schema
+        assert t[name].count() == want.count() > 0
 
 
 def test_building_houses_join_postal(spark, geo):

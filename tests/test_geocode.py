@@ -50,6 +50,37 @@ def test_forward_country_restriction(spark, geo):
     assert _fwd(spark, geo, road="Main Street", country="Xyzzyland").count() == 0
 
 
+def test_forward_mixed_country_batch(spark, geo):
+    """One batch mixing country terms — a resolvable term twice, a typo of
+    it, an unresolvable term and NULL — returns, per query, exactly the
+    rows that query returns alone (the batch's terms share one prepared
+    polygon set, keyed by term)."""
+    from geospark.forward import forward_geocode
+
+    cols = ("query_id long, road string, house_number string, postcode string, "
+            "city string, country string, center_lat double, center_lon double, "
+            "radius int, limit int")
+    terms = ["Adressia", "Adressia", "Adresia", "Xyzzyland", None]
+    qs = [(i, "Main Street", None, None, None, c, None, None, 20000, 100)
+          for i, c in enumerate(terms)]
+
+    def rows_by_query(batch):
+        out = forward_geocode(spark, geo["tables"], spark.createDataFrame(batch, cols))
+        got = {q[0]: [] for q in batch}
+        for r in out.collect():
+            got[r.query_id].append(tuple(r)[1:])
+        return {k: sorted(v, key=repr) for k, v in got.items()}
+
+    mixed = rows_by_query(qs)
+    alone = {}
+    for q in qs:
+        alone.update(rows_by_query([q]))
+    assert {k: len(v) for k, v in mixed.items()} == {k: len(v) for k, v in alone.items()}
+    assert mixed == alone
+    assert mixed[0] and mixed[0] == mixed[1] and mixed[2]
+    assert mixed[3] == []
+
+
 def test_forward_center_radius_and_ranking(spark, geo):
     from geospark import proj
     import numpy as np

@@ -213,11 +213,32 @@ def test_format_country_specific():
         "1 Main St\nSpringfield, IL 62704"
 
 
-def test_jvm_trigram_similarity_matches_kernel():
-    """tables.pair_similarity_col (pure JVM) must equal the text.py kernel —
-    guarded here and by every trigram-bearing DuckDB oracle."""
-    pytest.importorskip("pyspark")
-    # exercised end-to-end in tests/test_geocode.py via the forward oracle;
-    # the column-expression variant is asserted in test_oracle_parity-covered
-    # paths. Kernel-only sanity for the padded 1-char word edge:
+def test_jvm_trigram_similarity_matches_kernel(spark, geo):
+    """The JVM similarity (tables.sim_from_arrays over trigram_tokens_col)
+    must equal the text.py kernel exactly — on the fixture street names and
+    house numbers, and on edge strings (empty, one character,
+    punctuation-only, umlauts/eszett)."""
+    from pyspark.sql import functions as F
+
+    from geospark.tables import sim_from_arrays, trigram_tokens_col
+
     assert text.trigrams("a") == frozenset(["  a", " a "])
+    names = sorted(r[0] for r in geo["struct"]["struct_streets"]
+                   .select("name").distinct().collect() if r[0] is not None)
+    hns = sorted(r[0] for r in geo["struct"]["struct_house"]
+                 .select("house_number").distinct().collect() if r[0] is not None)
+    edges = ["", "a", "Z", "-", "!!!", " . , ", "Müller", "MÜLLER", "Straße",
+             "Strasse", "Großes Öd", "12a", "1/2"]
+    pairs = []
+    for vals in (names, hns):
+        # every value against its neighbours: near-duplicates, shared
+        # suffixes and disjoint pairs alike
+        pairs += [(a, b) for i, a in enumerate(vals) for b in vals[i:i + 3]]
+    pairs += [(a, b) for a in edges for b in edges + names[:5] + hns[:5]]
+    df = spark.createDataFrame(pairs, "a string, b string")
+    got = df.select("a", "b", sim_from_arrays(
+        trigram_tokens_col(F.col("a")), trigram_tokens_col(F.col("b"))).alias("s")).collect()
+    assert len(got) == len(pairs)
+    bad = [(r.a, r.b, r.s, text.similarity(r.a, r.b)) for r in got
+           if r.s != text.similarity(r.a, r.b)]
+    assert not bad, bad[:10]
