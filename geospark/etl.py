@@ -196,17 +196,17 @@ def geohash_col_jvm(x_col, y_col, precision: int = 12):
 
 
 def build_struct_tables(spark: SparkSession, osm: dict,
-                        hot_cell_rows: int | None = None) -> dict:
+                        hot_cell_rows: int = 250_000) -> dict:
     """optimize/001..014 + geocoder/001 (wordlist).
 
     ``hot_cell_rows``: mega-cell threshold for adaptive cell splitting (X8 /
     north_rule). After the house table materializes, cells holding more rows
     than this are re-encoded at child resolution (tiling.adaptive_cells)
     BEFORE the range partition, so a dense-city cell can never serialize into
-    one partition/row-group by id alone. Default from $GEOSPARK_HOT_CELL_ROWS
-    else 250_000 (~2 comfortable 128 MB row groups of skinny house rows);
-    0 disables. Consumers are unaffected: the reverse/forward joins key on
-    the (ix, iy) grid, and cell_id is a locality/partition key only."""
+    one partition/row-group by id alone. Default 250_000 (~2 comfortable
+    128 MB row groups of skinny house rows); 0 disables. Consumers are
+    unaffected: the reverse/forward joins key on the (ix, iy) grid, and
+    cell_id is a locality/partition key only."""
     admin = osm["osm_admin"]
     postal = osm["osm_postal_code"]
 
@@ -371,17 +371,12 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     )
 
     # --- 014/015: cleanup + spatial clustering columns ----------------------
-    from .tables import trigram_tokens_col
-
     gx, gy = grid_cols(F.col("x"), F.col("y"), GRID_JOIN_RES)
     struct_house = houses.select(
         "id", "osm_id", "house_number", "x", "y", "street_id",
     ).withColumn("cell_id", cell_col_jvm(F.col("x"), F.col("y"))) \
      .withColumn("ix", gx).withColumn("iy", gy) \
-     .withColumn("geohash", geohash_col_jvm(F.col("x"), F.col("y"))) \
-     .withColumn("hn_t", trigram_tokens_col(F.col("house_number")))
-    # ^ hn_t: the house-number GIN trigram index materialized as a column
-    # (X3) — the forward residual % is then array_intersect on ready arrays
+     .withColumn("geohash", geohash_col_jvm(F.col("x"), F.col("y")))
     # CLUSTER ... USING geohash (optimize/015) + the importer's 360-way
     # range partitioning on ST_X (X1) -> range-partition on the Morton cell id
     # (a space-filling curve: contiguous id ranges are spatially local) and
@@ -395,15 +390,13 @@ def build_struct_tables(spark: SparkSession, osm: dict,
         or max(16, 2 * spark.sparkContext.defaultParallelism)
     # barrier BEFORE the range partition: RangePartitioner's sampling pass
     # evaluates the child plan a second time — checkpointing first means the
-    # geohash/trigram kernels run once, and both the sample and the real
+    # cell/geohash kernels run once, and both the sample and the real
     # pass read materialized rows (measured ~2x on the struct_house build)
     struct_house = _barrier(struct_house)
 
     # X8: adaptive cell splitting for mega-cells (dense cities). The
     # histogram is one combiner-friendly groupBy over the materialized
     # table; hot cells are few by construction, so the map broadcasts.
-    if hot_cell_rows is None:
-        hot_cell_rows = int(_os.environ.get("GEOSPARK_HOT_CELL_ROWS", "250000"))
     if hot_cell_rows > 0:
         import math
 

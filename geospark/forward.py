@@ -5,14 +5,16 @@ dispatch precedence of geocode_osm (postcode > city > road, 003:474-492) and
 the country branch (003:143-155), re-expressed per the north_star as a
 *tokenized trigram-similarity join in Spark SQL*:
 
-  1. the ``s.name % search_term`` GIN-index scan becomes: explode query road
-     terms and DISTINCT street names into pg_trgm trigrams, equi-join on the
-     trigram, count shared grams per (query, name), compute
-     sim = shared / (|A| + |B| - shared) and keep sim >= 0.3 (J8/X3).
-     The exploded token table IS the inverted index, shuffled once on the
-     trigram key; skew on ubiquitous trigrams is handled by AQE skew-join.
+  1. the ``s.name % search_term`` GIN-index scan becomes an AllPairs prefix
+     join (J8/X3, tables.trigram_prefix / tables.prefix_probe): DISTINCT
+     street names and the batch's distinct road terms each keep only their
+     rarest pg_trgm trigrams as join keys, the prefix index is streamed
+     against the broadcast query prefix, and every joined pair is verified
+     exactly (sim = shared / (|A| + |B| - shared) >= 0.3). The prefix lemma
+     makes this lossless; ubiquitous trigrams never become join keys. The
+     house-number ``%`` is the same join over distinct house-number strings.
   2. residual ``%`` predicates on the already-pruned candidates
-     (house_number/postcode/city) are pure JVM array_intersect over trigram
+     (postcode/city) are pure JVM array_intersect over trigram
      arrays PRECOMPUTED per side (GIN-index-as-data; never rebuilt inside
      join conditions).
   3. the country restriction resolves the batch's distinct country terms
@@ -31,56 +33,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from . import proj, spatial, text
-from .reverse import ZERO_UUID, _admin_cols, _pack_candidates, _unpack_top1
-from .tables import GeocoderTables, sim_from_arrays, sim_ge_arrays, trigram_tokens_col
+from . import proj, spatial
+from .reverse import ZERO_UUID, _admin_cols, _pack_candidates, _top1_per_query, _unpack_top1
+from .tables import (GeocoderTables, prefix_probe, sim_from_arrays, sim_ge_arrays,
+                     trigram_tokens_col)
 
 RESULT_COLS = ["query_id", "house", "road", "house_number", "postcode", "city",
                "county", "state", "x", "y", "distance", "trgm_dist", "license_id"]
 
 
 def _street_candidates(tables: GeocoderTables, road_terms: DataFrame) -> DataFrame:
-    """Trigram-token join: (q_road, matching street name, trgm_dist) with
-    sim >= 0.3. ``road_terms``: distinct (q_road) strings.
-
-    PPJoin/AllPairs prefix filtering on BOTH sides (the same machinery as
-    the hn join below): join keys are only each value's rarest
-    n - ceil(tau*n) + 1 grams under one global (df asc, trigram asc) order —
-    any pair with Jaccard >= tau must share a prefix gram (AllPairs prefix
-    lemma), so the ubiquitous suffix grams every German street name carries
-    never materialize |streets| x |queries| pair rows (profiled: 390 CPU-s
-    of a 485 CPU-s geocode_pages job at sf1.0 was this join's shared-gram
-    aggregate). Surviving candidate pairs are few; exact pg_trgm sim is
-    recomputed per pair in value space — results identical to the
-    all-grams join."""
-    q_tok = (road_terms.distinct()
-             .withColumn("q_t", trigram_tokens_col(F.col("q_road")))
-             .select("q_road", "q_t", F.size("q_t").alias("n_q"),
-                     F.explode("q_t").alias("trigram")))
-    # query grams unseen in the street index get df=0 (rarest): they match
-    # nothing but legally occupy prefix slots
-    q_pfx_w = Window.partitionBy("q_road").orderBy(F.col("__df").asc(), F.col("trigram").asc())
-    q_pfx = (q_tok.join(F.broadcast(tables.street_gram_df), "trigram", "left")
-             .withColumn("__df", F.coalesce(F.col("df"), F.lit(0)))
-             .withColumn("__rk", F.row_number().over(q_pfx_w))
-             .filter(F.col("__rk") <= F.col("n_q")
-                     - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_q")) + 1)
-             .select("q_road", "q_t", "trigram"))
-    # stream the big, partitioned street-name prefix index; broadcast the
-    # per-batch distinct query prefixes (same single-task-explosion
-    # rationale as hn_pairs). Exact sim = array_intersect over the arrays
-    # BOTH prefix rows carry — filter-then-distinct, so the per-pair cost is
-    # one intersect, never a trigram rebuild.
-    cand = tables.street_name_prefix.join(F.broadcast(q_pfx), "trigram")
-    # filter FIRST with the single-intersect predicate (it lands in the join
-    # condition, where rejected pairs — the vast majority — now cost one
-    # array_intersect instead of two), then compute the exact sim VALUE only
-    # for survivors (same rows, same sim: the predicate is the exact
-    # rational rearrangement of sim >= tau — tables.sim_ge_arrays)
-    return (cand.filter(sim_ge_arrays(F.col("q_t"), F.col("name_t")))
-            .withColumn("sim", sim_from_arrays(F.col("q_t"), F.col("name_t")))
-            .select("q_road", F.col("name").alias("road"),
-                    (1.0 - F.col("sim")).alias("trgm_dist"))
+    """(q_road, matching street name, trgm_dist) with sim >= 0.3 for the
+    distinct ``road_terms.q_road`` strings: the street-name prefix join
+    (tables.prefix_probe); the exact sim VALUE is computed only for the
+    verified survivors."""
+    pairs = prefix_probe(road_terms, "q_road", tables.street_gram_df,
+                         tables.street_name_prefix, "name")
+    return (pairs.select("q_road", F.col("name").alias("road"),
+                         (1.0 - sim_from_arrays(F.col("q_road_t"), F.col("name_t")))
+                         .alias("trgm_dist"))
             .distinct())
 
 
@@ -147,47 +118,20 @@ def forward_geocode_unstructured(spark, tables: GeocoderTables, queries: DataFra
 
 
 def _top1_forward(cand: DataFrame, with_admin: bool) -> DataFrame:
-    """Per-query best forward candidate as ONE map-side-combinable hash
-    aggregate (the forward twin of reverse._top1_per_query): min_by()
-    partial-aggregates inside the candidate-generation stage, so the
-    query_id exchange carries one skinny row per (query, upstream partition)
-    instead of every candidate row — the window form shuffled AND sorted the
-    full candidate set through one giant exchange.
-
-    Physical honesty: min_by's buffer is a struct, which HashAggregateExec
-    cannot hold (probed on this Spark: only fully-primitive value+ordering
-    min_by hash-aggregates), so the PARTIAL aggregate plans as a
-    SortAggregate — it still combines map-side, but via a partition-LOCAL
-    sort of the candidate slice (spills to local disk at bench sf4.0).
-    That trade is still right: the exchange stays skinny (the window moved
-    the whole candidate set through one query_id shuffle), and a
-    partition-local sort scales horizontally — each executor sorts only
-    its own slice, nothing crosses the wire. An exact hash-aggregable
-    argmin would need either a join-back (recomputing the candidate
-    relation) or packing string payloads into primitives — both worse.
-
-    Exact for limit=1: row_number()==1 under (distance asc NULLS LAST,
-    trgm_dist asc, id asc[, a4_name asc NULLS LAST, a6_name asc NULLS LAST])
-    is min_by keyed on the same tuple. NULLS LAST is encoded as
+    """reverse._top1_per_query keyed for forward: row_number()==1 under
+    (distance asc NULLS LAST, trgm_dist asc, id asc[, a4_name asc NULLS LAST,
+    a6_name asc NULLS LAST]). NULLS LAST is encoded as
     coalesce(distance, +inf) — planar distances are finite — and for the
     admin-name tiebreaks as (isNull asc, coalesce(name, '') asc): false
     sorts before true, so non-null names win, and tied nulls are disambiguated
     only when the preceding unique-id key already ties (PIP-duplicated rows
-    of the SAME house), where the surviving columns are identical anyway.
-
-    As in reverse._top1_per_query, the grouping key is re-selected from the
-    GROUP rather than from the min_by struct, so a consumer that prunes to
-    query_id alone drops the aggregate function (and its full-candidate
-    partial sort) instead of recomputing it."""
+    of the SAME house), where the surviving columns are identical anyway."""
     key = [F.coalesce(F.col("distance"), F.lit(float("inf"))),
            F.col("trgm_dist"), F.col("id")]
     if with_admin:
         key += [F.col("a4_name").isNull(), F.coalesce(F.col("a4_name"), F.lit("")),
                 F.col("a6_name").isNull(), F.coalesce(F.col("a6_name"), F.lit(""))]
-    payload = [c for c in cand.columns if c != "query_id"]
-    best = F.min_by(F.struct(*[F.col(c) for c in payload]),
-                    F.struct(*key)).alias("__best")
-    return cand.groupBy("query_id").agg(best).select("query_id", "__best.*")
+    return _top1_per_query(cand, *key)
 
 
 def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
@@ -239,15 +183,15 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     q = q.withColumn("q_pc_t", trigram_tokens_col(F.col("q_postcode"))) \
          .withColumn("q_city_t", trigram_tokens_col(F.col("q_city")))
 
-    # J8: street-name candidates per distinct road term via the tokenized
-    # trigram join; then fan back out to queries and street rows
+    # J8: street-name candidates per distinct road term via the trigram
+    # prefix join; then fan back out to queries and street rows
     # SKINNY candidates: the street/city display attributes are NOT carried
     # through the house joins and ranking shuffles — they are joined back by
     # street_id after the final top-k (street_city is key-preserving on
     # street_id, so the decorate-after-top-k rewrite is exact); only the
     # trigram arrays needed by the residual % predicates ride along and are
     # dropped right after the branch filter.
-    cand_names = _street_candidates(tables, q.select("q_road").distinct())
+    cand_names = _street_candidates(tables, q)
     street_dim = tables.street_city.select(
         "street_id", F.col("road").alias("s_road"), "city_t", "pc_t")
     cand = (
@@ -260,7 +204,7 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     # expressed as per-row residual predicates (batch-level branch pruning is
     # Catalyst constant-folding when a whole batch shares the shape)
     # sim_ge_arrays: threshold-only residuals — single array_intersect per
-    # evaluated branch (same rationale as the hn_pairs filter below)
+    # evaluated branch (tables.sim_ge_arrays)
     cand = cand.withColumn(
         "__branch_ok",
         F.when(F.col("q_postcode").isNotNull(),
@@ -288,48 +232,18 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
              if c not in ("query_id", "q_road", "q_hn", "street_id")]
 
     # (a) house_number present: the residual ``h.house_number % hn`` (003:58)
-    # as a VALUE-SPACE set-similarity join. hn similarity depends only on
-    # the two strings, so it is computed once per (distinct query hn term) x
-    # (distinct house-number string) — both value spaces are orders of
-    # magnitude smaller than the row counts they describe — via the
-    # exploded-trigram equi-join + shared-gram count (exact pg_trgm sim;
-    # lossless: sim >= 0.3 > 0 requires a shared gram). Candidates then
-    # reach houses through a plain equi-join on (street_id, house_number).
-    # This never multiplies by houses-per-street: a street-keyed token join
-    # was measured at 100M pair rows / 30 GB spill on dense bench streets.
+    # in VALUE space — the same prefix join as the street names
+    # (tables.prefix_probe), over the batch's distinct query hn terms x the
+    # distinct house-number strings, both orders of magnitude smaller than
+    # the row counts they describe. Verified (term, value) pairs then reach
+    # houses through a plain equi-join on (street_id, house_number), so the
+    # similarity work never multiplies by houses-per-street: a street-keyed
+    # token join was measured at 100M pair rows / 30 GB spill on dense bench
+    # streets. Pair funnel: perfbench's traced forward.hn_pairs /
+    # forward.hn_verified.
     with_hn = cand.filter(F.col("q_hn").isNotNull())
-    # query-side prefix tokens, ordered by the SAME global gram-frequency
-    # order as the house index (grams unseen on the house side get df=0 —
-    # rarest — they match nothing but legally occupy prefix slots)
-    q_tok = (with_hn.select("q_hn").distinct()
-             .withColumn("q_hn_arr", trigram_tokens_col(F.col("q_hn")))
-             .select("q_hn", "q_hn_arr", F.size("q_hn_arr").alias("n_q"),
-                     F.explode("q_hn_arr").alias("trigram")))
-    q_pfx_w = Window.partitionBy("q_hn").orderBy(F.col("__df").asc(), F.col("trigram").asc())
-    q_tok = (q_tok.join(F.broadcast(tables.hn_gram_df), "trigram", "left")
-             .withColumn("__df", F.coalesce(F.col("df"), F.lit(0)))
-             .withColumn("__rk", F.row_number().over(q_pfx_w))
-             .filter(F.col("__rk") <= F.col("n_q")
-                     - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_q")) + 1)
-             .select("q_hn", "q_hn_arr", "trigram"))
-    # STREAM the partitioned house-prefix index and BROADCAST the per-batch
-    # query tokens (the tiny distinct-query side AQE-coalesces to ~1
-    # partition — streaming it would funnel the whole pair generation
-    # through one task; measured as a single 300 s task spilling 20 GB).
-    # Exact pg_trgm sim verifies each join row via array_intersect over the
-    # carried arrays BEFORE the distinct — the old distinct-then-verify
-    # shape over raw strings let Catalyst push the filter below the agg,
-    # rebuilding trigrams per pair row (profiled: 366 of 485 CPU-s of
-    # geocode_pages at sf1.0 — the scaling bottleneck).
-    # sim_ge_arrays, not sim_from_arrays >= tau: the filter lands in the
-    # join CONDITION (no codegen subexpr elimination there), and the
-    # rational rearrangement evaluates the per-pair array_intersect ONCE
-    # instead of twice — this condition ran 137.6M times at bench sf4
-    # (125.3M distinct pairs, 7.2M survivors; measured by
-    # scripts/hn_join_multiplier.py).
     hn_pairs = (
-        tables.hn_value_prefix.join(F.broadcast(q_tok), "trigram")
-        .filter(sim_ge_arrays(F.col("q_hn_arr"), F.col("hn_t")))
+        prefix_probe(with_hn, "q_hn", tables.hn_gram_df, tables.hn_value_prefix, "hn")
         .select("q_hn", F.col("hn").alias("house_number")).distinct()
     )
     cand_hn = (

@@ -48,7 +48,7 @@ def prepare_wordlist(wordlist: DataFrame, parts: int = 4) -> DataFrame:
 # broadcast regime) and 1.70x / 2.42x FASTER at 438k / 928k words
 # (|distinct codes| << |words| pays off). Log-linear interpolation of the
 # measured bracket puts the crossover at ~67k words; 65536 is the dispatch
-# default. Override with GEOSPARK_PREDICT_VALUE_MIN.
+# default.
 VALUE_SPACE_MIN_WORDS = 65536
 
 
@@ -63,11 +63,7 @@ def predict_text(spark, wordlist_m: DataFrame, queries: DataFrame, k: int = 10) 
     scripts/predict_scale.py). The size probe is a bounded
     ``limit(T+1).count()`` — it scans at most T+1 rows, so it stays cheap at
     corpus scale."""
-    import os
-
-    threshold = int(os.environ.get("GEOSPARK_PREDICT_VALUE_MIN",
-                                   str(VALUE_SPACE_MIN_WORDS)))
-    if threshold > 0 and wordlist_m.limit(threshold + 1).count() <= threshold:
+    if wordlist_m.limit(VALUE_SPACE_MIN_WORDS + 1).count() <= VALUE_SPACE_MIN_WORDS:
         return predict_text_per_word(spark, wordlist_m, queries, k)
     return predict_text_value_space(spark, wordlist_m, queries, k)
 

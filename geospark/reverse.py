@@ -169,23 +169,27 @@ G1_METERS = 32.0
 G1_RES = 21
 
 
-def _top1_per_query(cand: DataFrame) -> DataFrame:
-    """Per-query best candidate under (distance asc, id asc) as ONE hash
-    aggregate: min_by() partial-aggregates inside the candidate-generation
-    stage (map-side combine), so the exchange carries one skinny row per
-    (query, upstream partition) instead of the full candidate set — the
-    window form shuffles and sorts EVERY candidate row (the job's largest
-    exchange, 4.2 GB at bench sf4.0) to keep one. The partial is a
-    SortAggregate, not a HashAggregate (min_by's struct buffer is not
-    hash-aggregable — probed; only fully-primitive min_by hashes), i.e. it
-    sorts each candidate partition LOCALLY before combining. Still the
-    right trade: nothing crosses the wire, and per-partition sorts scale
-    horizontally with executors (see forward._top1_forward for the full
-    argument). Exact for limit=1:
-    min_by on struct(distance, id) == row_number()==1 under
-    (distance asc, id asc), id unique. Round-1 satisfaction needs no
+def _top1_per_query(cand: DataFrame, *key) -> DataFrame:
+    """Per-query best candidate under ``key`` (default (distance asc, id
+    asc)) as ONE map-side-combinable aggregate: min_by() partial-aggregates
+    inside the candidate-generation stage, so the query_id exchange carries
+    one skinny row per (query, upstream partition) instead of the full
+    candidate set — the window form shuffles and sorts EVERY candidate row
+    (the job's largest exchange, 4.2 GB at bench sf4.0) to keep one. Exact
+    for limit=1: min_by on struct(key) == row_number()==1 under the same
+    ordering, the key ending in a unique id. Round-1 satisfaction needs no
     count() either: with limit=1 a query is satisfied iff it has ANY
     candidate, i.e. iff its group exists.
+
+    Physical honesty: min_by's buffer is a struct, which HashAggregateExec
+    cannot hold (probed: only fully-primitive value+ordering min_by
+    hash-aggregates), so the PARTIAL aggregate plans as a SortAggregate —
+    it still combines map-side, but via a partition-LOCAL sort of the
+    candidate slice (spills to local disk at bench sf4.0). Still the right
+    trade: nothing crosses the wire, and per-partition sorts scale
+    horizontally with executors. An exact hash-aggregable argmin would need
+    either a join-back (recomputing the candidate relation) or packing
+    string payloads into primitives — both worse.
 
     The grouping key is re-selected from the GROUP, not from the min_by
     struct (the struct's query_id always equals it, but Catalyst cannot
@@ -195,9 +199,9 @@ def _top1_per_query(cand: DataFrame) -> DataFrame:
     instead of re-running the full candidate SORT a second time (probed:
     the struct-keyed shape carried TWIN full-width partial SortAggregates
     through the mining plan — 59 GiB local sort-spill EACH at bench sf8)."""
+    key = key or (F.col("distance"), F.col("id"))
     payload = [c for c in cand.columns if c != "query_id"]
-    best = F.min_by(F.struct(*[F.col(c) for c in payload]),
-                    F.struct(F.col("distance"), F.col("id"))).alias("__best")
+    best = F.min_by(F.struct(*[F.col(c) for c in payload]), F.struct(*key)).alias("__best")
     return cand.groupBy("query_id").agg(best).select("query_id", "__best.*")
 
 

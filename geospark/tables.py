@@ -2,9 +2,10 @@
 
 Holds the struct tables (ETL output), the admin polygons (as broadcastable
 PreparedPolygons per admin_level), the pre-joined street->city dimension
-(J1/J2's small side), the distinct-street-name trigram token table (the
-"GIN trigram index" re-materialized as data, SURVEY.md X3), and optional
-OpenAddresses tables. Everything query functions need, built once.
+(J1/J2's small side), the trigram prefix indexes over distinct street names
+and house numbers (the "GIN trigram index" re-materialized as data,
+SURVEY.md X3), and optional OpenAddresses tables. Everything query
+functions need, built once.
 """
 
 from __future__ import annotations
@@ -72,6 +73,76 @@ def sim_ge_arrays(ta, tb):
         & (shared * F.lit(p + q) >= (F.size(ta) + F.size(tb)) * F.lit(p))
 
 
+def trigram_prefix(values: DataFrame, key: str,
+                   gram_df: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """AllPairs prefix of every distinct ``values.key`` string, as rows
+    (key, key_t, trigram), key_t carrying the value's full trigram array.
+
+    pg_trgm ``%`` is re-expressed as a PPJoin/AllPairs prefix join: each
+    value's grams are ordered by ONE global (df asc, trigram asc) order and
+    only the first n - ceil(tau*n) + 1 become join keys. Any pair with
+    Jaccard >= tau shares a prefix gram (AllPairs prefix lemma), so pairs
+    sharing only ubiquitous grams — the German street suffixes "str",
+    "tra", "raß", "aße"; "  1", in ~46% of numeric house numbers — are never
+    materialized (the all-grams token join was profiled at 390 of 485 CPU-s
+    of geocode_pages at bench sf1.0); prefix_probe verifies survivors
+    exactly. The order and the cut are correct only if BOTH sides of a
+    join use them identically — hence this one builder for both. Returns
+    (gram_df, prefix):
+
+    * index side (``gram_df`` None): df is the values' own gram document
+      frequency (the returned gram_df), joined inner.
+    * query side (``gram_df`` = the index's, returned as is): df comes from
+      a left join, and grams unseen in the index get df = 0 (rarest): they
+      match nothing but legally occupy prefix slots.
+
+    Carrying key_t makes the per-pair verification one array_intersect over
+    ready arrays instead of two fresh trigram constructions per probed pair
+    (regexp+transform+distinct per PAIR was profiled at ~80 µs/row)."""
+    arr = f"{key}_t"
+    tokens = (values.select(key).distinct()
+              .withColumn(arr, trigram_tokens_col(F.col(key)))
+              .select(key, arr, F.explode(arr).alias("trigram")))
+    if gram_df is None:
+        gram_df = tokens.groupBy("trigram").agg(F.count("*").alias("df"))
+        ranked = tokens.join(gram_df, "trigram")
+    else:
+        ranked = (tokens.join(F.broadcast(gram_df), "trigram", "left")
+                  .withColumn("df", F.coalesce(F.col("df"), F.lit(0))))
+    n = F.size(arr)
+    w = Window.partitionBy(key).orderBy(F.col("df").asc(), F.col("trigram").asc())
+    prefix = (ranked.withColumn("__rk", F.row_number().over(w))
+              .filter(F.col("__rk") <= n - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * n) + 1)
+              .select(key, arr, "trigram"))
+    return gram_df, prefix
+
+
+def prefix_probe(terms: DataFrame, term: str, gram_df: DataFrame,
+                 prefix_index: DataFrame, value: str) -> DataFrame:
+    """Join rows (term, term_t, value, value_t, trigram) of the distinct
+    ``terms.term`` strings against a trigram_prefix index over ``value``,
+    kept iff pg_trgm similarity >= tau — exactly the pairs ``term % value``
+    holds for, one row per shared prefix gram (callers project + distinct).
+
+    STREAM the partitioned prefix index and BROADCAST the per-batch query
+    prefix: the tiny distinct-query side AQE-coalesces to ~1 partition, and
+    streaming it would funnel the whole pair generation through one task
+    (measured: a single 300 s task spilling 20 GB). The exact verify runs
+    on each join row BEFORE any distinct: a distinct-then-verify shape over
+    raw strings let Catalyst push the filter below the aggregate, rebuilding
+    trigrams per pair row (366 of 485 CPU-s of geocode_pages at bench
+    sf1.0). sim_ge_arrays, not sim_from_arrays >= tau: the filter lands in
+    the join CONDITION (no codegen subexpression elimination there), and the
+    rational rearrangement evaluates the per-pair array_intersect once
+    instead of twice (for the hn join it ran 137.6M times at bench sf4, 7.2M
+    survivors). The join-row / verified-row funnel of both forward joins is
+    perfbench's traced forward.{street,hn}_pairs / _verified;
+    scripts/hn_join_multiplier.py counts it at any sf."""
+    _, q_pfx = trigram_prefix(terms, term, gram_df)
+    return (prefix_index.join(F.broadcast(q_pfx), "trigram")
+            .filter(sim_ge_arrays(F.col(f"{term}_t"), F.col(f"{value}_t"))))
+
+
 class GeocoderTables:
     def __init__(self, spark: SparkSession, struct: dict, osm_admin: DataFrame,
                  oa: dict | None = None, wordlist: DataFrame | None = None):
@@ -98,67 +169,13 @@ class GeocoderTables:
             .withColumn("pc_t", trigram_tokens_col(F.col("postcode")))
         )
 
-        # X3: trigram inverted index over distinct street names, WITH the
-        # same PPJoin/AllPairs prefix filter the hn index carries (below):
-        # the ubiquitous German suffix grams ("str", "tra", "raß", "aße")
-        # occur in nearly every street name AND nearly every query road
-        # term, so an all-grams token join fans out |streets| x |queries|
-        # pair rows before the shared-gram count can prune — profiled at
-        # 390 CPU-s of a 485 CPU-s geocode_pages job at bench sf1.0 (the
-        # scaling-efficiency killer: the aggregate's memory traffic grows
-        # superlinearly with cores). Prefix join keys (rarest
-        # n - ceil(tau*n) + 1 grams per name) + exact per-pair verification
-        # produce identical results with the fan-out of the RARE grams only.
-        # Prefix rows CARRY the value's full trigram array (name_t): the
-        # per-pair exact verification is then one array_intersect over ready
-        # arrays instead of two fresh trigram constructions per probed pair
-        # (regexp+transform+distinct per PAIR was profiled at ~80 µs/row —
-        # 366 s of a 485 CPU-s geocode_pages job went to exactly that in the
-        # hn join before this index shape).
-        # (r5: the unfiltered all-grams street_name_tokens index that
-        # predated the prefix index was removed — every consumer now joins
-        # through street_name_prefix, so building+caching it was pure waste)
-        _name_vals = self.streets.select(F.col("name")).distinct() \
-            .withColumn("name_t", trigram_tokens_col(F.col("name")))
-        _name_tokens = _name_vals.select(
-            "name", "name_t", F.size("name_t").alias("n_trgm"),
-            F.explode("name_t").alias("trigram"))
-        self.street_gram_df = _name_tokens.groupBy("trigram") \
-            .agg(F.count("*").alias("df"))
-        _spfx_w = Window.partitionBy("name").orderBy(F.col("df").asc(), F.col("trigram").asc())
-        self.street_name_prefix = (
-            _name_tokens.join(self.street_gram_df, "trigram")
-            .withColumn("__rk", F.row_number().over(_spfx_w))
-            .filter(F.col("__rk") <= F.col("n_trgm")
-                    - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_trgm")) + 1)
-            .select("name", "name_t", "trigram"))
-
-        # X3 again, for house numbers: the hn GIN index materialized over
-        # DISTINCT house-number strings, with PPJoin/AllPairs-style PREFIX
-        # FILTERING. The forward geocoder computes pg_trgm similarity in
-        # value space (distinct query terms x distinct hn strings), then
-        # equi-joins candidates to houses on (street_id, house_number) — the
-        # similarity work never multiplies by houses-per-street. Prefix
-        # filter: sort each value's grams by global document frequency
-        # (rarest first) and keep only the first n - ceil(tau*n) + 1 as join
-        # keys; any pair with sim >= tau must share a prefix gram (overlap
-        # >= ceil(tau*max(nA,nB))), so pairs sharing only ultra-common grams
-        # ("  1" covers ~46% of numeric hn values — quadratic blow-up) are
-        # never materialized. Exact sim is re-verified per surviving pair.
-        hn_tokens = (
-            self.houses.select(F.col("house_number").alias("hn")).distinct()
-            .withColumn("hn_t", trigram_tokens_col(F.col("hn")))
-            .select("hn", "hn_t", F.size("hn_t").alias("n_hn"),
-                    F.explode("hn_t").alias("trigram")))
-        self.hn_gram_df = hn_tokens.groupBy("trigram").agg(F.count("*").alias("df"))
-        _pfx_w = Window.partitionBy("hn").orderBy(F.col("df").asc(), F.col("trigram").asc())
-        # carries hn_t for the same reason street_name_prefix carries name_t
-        self.hn_value_prefix = (
-            hn_tokens.join(self.hn_gram_df, "trigram")
-            .withColumn("__rk", F.row_number().over(_pfx_w))
-            .filter(F.col("__rk") <= F.col("n_hn")
-                    - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_hn")) + 1)
-            .select("hn", "hn_t", "trigram"))
+        # X3: the GIN trigram indexes re-materialized as data, over DISTINCT
+        # street names and DISTINCT house-number strings — AllPairs prefix
+        # indexes (see trigram_prefix) that forward probes via prefix_probe
+        self.street_gram_df, self.street_name_prefix = trigram_prefix(
+            self.streets.select("name"), "name")
+        self.hn_gram_df, self.hn_value_prefix = trigram_prefix(
+            self.houses.select(F.col("house_number").alias("hn")), "hn")
 
         # per-street rank of houses by id: for queries with NULL house_number
         # and NULL center/country the in-street ordering is (trgm_dist, id) —

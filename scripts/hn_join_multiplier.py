@@ -1,9 +1,9 @@
 """Measure the prefix-gram multiplicity of the forward value-space joins.
 
-The exact-sim verification (array_intersect) currently runs inside the
-BroadcastHashJoin CONDITION of the hn / street-name value-space joins —
-once per (pair x shared prefix trigram) — and a distinct collapses the
-duplicates afterwards. This script counts, at a given sf:
+The exact-sim verification (array_intersect) runs inside the
+BroadcastHashJoin CONDITION of the hn / street-name value-space prefix joins
+(geospark.tables.prefix_probe) — once per (pair x shared prefix trigram) —
+and a distinct collapses the duplicates afterwards. This script counts, at a given sf:
 
     join_rows      — (pair x shared prefix gram) rows the condition runs on
     distinct_pairs — unique (term, value) pairs reaching the verify
@@ -26,14 +26,31 @@ sys.path.insert(0, ".")
 BENCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH")
 
 
+def _funnel(terms, term, gram_df, prefix_index, value) -> dict:
+    from pyspark.sql import functions as F
+
+    from geospark.tables import prefix_probe, trigram_prefix
+
+    _, q_pfx = trigram_prefix(terms, term, gram_df)
+    joined = prefix_index.join(F.broadcast(q_pfx), "trigram")
+    out = {
+        "join_rows": joined.count(),
+        "distinct_pairs": joined.select(term, value).distinct().count(),
+        "verified": prefix_probe(terms, term, gram_df, prefix_index, value)
+        .select(term, value).distinct().count(),
+    }
+    out["multiplier"] = round(out["join_rows"] / max(1, out["distinct_pairs"]), 2)
+    return out
+
+
 def main(sf: float) -> None:
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
-    from geospark import benchgen, etl, mine, text
+    from geospark import benchgen, etl, mine
     from geospark.session import get_spark
-    from geospark.tables import GeocoderTables, trigram_tokens_col
+    from geospark.tables import GeocoderTables
 
-    spark = get_spark("hn-multiplier", master="local[8]")
+    spark = get_spark("hn-multiplier", master=f"local[{len(os.sched_getaffinity(0))}]")
     spark.sparkContext.setLogLevel("ERROR")
     world_dir = benchgen.ensure_bench_world(BENCH_ROOT, sf)
     osm = etl.load_osm_tables(spark, world_dir)
@@ -43,54 +60,12 @@ def main(sf: float) -> None:
     addr = mine.mine_addresses(pages)
 
     out = {"sf": sf}
-
-    # --- hn value-space join (forward.py hn_pairs) -------------------------
-    q_tok = (addr.select(F.col("house_number").alias("q_hn")).distinct()
-             .withColumn("q_hn_arr", trigram_tokens_col(F.col("q_hn")))
-             .select("q_hn", "q_hn_arr", F.size("q_hn_arr").alias("n_q"),
-                     F.explode("q_hn_arr").alias("trigram")))
-    q_pfx_w = Window.partitionBy("q_hn").orderBy(F.col("__df").asc(), F.col("trigram").asc())
-    q_tok = (q_tok.join(F.broadcast(tables.hn_gram_df), "trigram", "left")
-             .withColumn("__df", F.coalesce(F.col("df"), F.lit(0)))
-             .withColumn("__rk", F.row_number().over(q_pfx_w))
-             .filter(F.col("__rk") <= F.col("n_q")
-                     - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_q")) + 1)
-             .select("q_hn", "q_hn_arr", "trigram"))
-    joined = tables.hn_value_prefix.join(F.broadcast(q_tok), "trigram")
-    from geospark.tables import sim_from_arrays
-    out["hn"] = {
-        "join_rows": joined.count(),
-        "distinct_pairs": joined.select("q_hn", "hn").distinct().count(),
-        "verified": joined.filter(
-            sim_from_arrays(F.col("q_hn_arr"), F.col("hn_t"))
-            >= text.TRGM_SIM_THRESHOLD).select("q_hn", "hn").distinct().count(),
-    }
-    out["hn"]["multiplier"] = round(out["hn"]["join_rows"] / max(1, out["hn"]["distinct_pairs"]), 2)
-
-    # --- street-name join (forward.py _street_candidates) ------------------
-    road_terms = addr.select(F.col("road").alias("q_road")).distinct()
-    s_tok = (road_terms
-             .withColumn("q_t", trigram_tokens_col(F.col("q_road")))
-             .select("q_road", "q_t", F.size("q_t").alias("n_q"),
-                     F.explode("q_t").alias("trigram")))
-    s_pfx_w = Window.partitionBy("q_road").orderBy(F.col("__df").asc(), F.col("trigram").asc())
-    s_pfx = (s_tok.join(F.broadcast(tables.street_gram_df), "trigram", "left")
-             .withColumn("__df", F.coalesce(F.col("df"), F.lit(0)))
-             .withColumn("__rk", F.row_number().over(s_pfx_w))
-             .filter(F.col("__rk") <= F.col("n_q")
-                     - F.ceil(F.lit(text.TRGM_SIM_THRESHOLD) * F.col("n_q")) + 1)
-             .select("q_road", "q_t", "trigram"))
-    sj = tables.street_name_prefix.join(F.broadcast(s_pfx), "trigram")
-    out["street"] = {
-        "join_rows": sj.count(),
-        "distinct_pairs": sj.select("q_road", "name").distinct().count(),
-        "verified": sj.filter(
-            sim_from_arrays(F.col("q_t"), F.col("name_t"))
-            >= text.TRGM_SIM_THRESHOLD).select("q_road", "name").distinct().count(),
-    }
-    out["street"]["multiplier"] = round(
-        out["street"]["join_rows"] / max(1, out["street"]["distinct_pairs"]), 2)
-
+    # forward.py hn_pairs
+    out["hn"] = _funnel(addr.select(F.col("house_number").alias("q_hn")), "q_hn",
+                        tables.hn_gram_df, tables.hn_value_prefix, "hn")
+    # forward.py _street_candidates
+    out["street"] = _funnel(addr.select(F.col("road").alias("q_road")), "q_road",
+                            tables.street_gram_df, tables.street_name_prefix, "name")
     print(json.dumps(out))
 
 

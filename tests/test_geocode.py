@@ -241,6 +241,45 @@ def test_sim_ge_arrays_matches_threshold_form(spark):
     assert [r.new for r in out if r.rid == rid] == [True]
 
 
+def _typo(s: str, i: int) -> str:
+    """Deterministic one-character substitution at position i."""
+    return s[:i] + ("x" if s[i] != "x" else "y") + s[i + 1:]
+
+
+@pytest.mark.parametrize("kind", ["street", "hn"])
+def test_prefix_probe_matches_brute_force(spark, geo, kind):
+    """The AllPairs prefix join (tables.trigram_prefix on both sides +
+    tables.prefix_probe) returns exactly the (term, value) pairs with
+    text.similarity >= TRGM_SIM_THRESHOLD: the prefix lemma holds only if
+    the index and the query side cut and order their grams identically."""
+    from geospark import text
+    from geospark.tables import prefix_probe
+
+    t = geo["tables"]
+    if kind == "street":
+        values = sorted(r[0] for r in t.streets.select("name").distinct().collect()
+                        if r[0] is not None)
+        terms = (values + [_typo(v, len(v) // 2) for v in values]
+                 + [_typo(v, 0) for v in values] + [v[:-3] for v in values]
+                 + ["Georgenstr", "Häuptstraße", "Müllerstraße", "a", ""]
+                 # matches two names only through the last gram of the cut
+                 + ["Straße"])
+        index, gram_df, value = t.street_name_prefix, t.street_gram_df, "name"
+    else:
+        values = sorted(r[0] for r in t.houses.select("house_number").distinct().collect()
+                        if r[0] is not None)
+        terms = ["1", "12a", "112", "7 b", "34", "102", "11b", "1a", "", "x"]
+        index, gram_df, value = t.hn_value_prefix, t.hn_gram_df, "hn"
+    terms = sorted(set(terms))
+    q = spark.createDataFrame([(x,) for x in terms], "q string")
+    got = {(r.q, r[value]) for r in
+           prefix_probe(q, "q", gram_df, index, value).select("q", value).collect()}
+    want = {(a, b) for a in terms for b in values
+            if text.similarity(a, b) >= text.TRGM_SIM_THRESHOLD}
+    assert want, "fixture terms must produce matches"
+    assert got == want, (sorted(want - got), sorted(got - want))
+
+
 def test_admin_overlap_multiplicity(spark, geo):
     """Overlapping admin_level-6 polygons duplicate result rows exactly like
     the reference's LEFT JOIN (§7.4.7) — never dedup."""
