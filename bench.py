@@ -1,6 +1,7 @@
 """Benchmark runner (driver contract): headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE COMPACT JSON line (last stdout line):
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may use).
+Prints ONE COMPACT JSON line (last stdout line):
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "pages_per_sec": ...,
    "load_at_launch": ..., "load_at_end": ...}
@@ -24,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 BENCH_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
 
 
@@ -45,8 +46,6 @@ def main():
               "timings will be inflated by co-tenant work; re-run quiet "
               "before reading deltas (BENCH/BASELINE.md methodology)",
               file=sys.stderr)
-    # the bench box has RAM to spare; the library default stays conservative
-    os.environ.setdefault("GEOSPARK_DRIVER_MEM", "32g")
     from geospark.session import get_spark
     from geospark import benchgen, etl, mine, oa
     from geospark.tables import GeocoderTables

@@ -16,6 +16,15 @@ The join side is houses (the 10^12-scale relation at design scale): it is
 pre-partitioned/sorted by cell_id by the ETL, so the equi-join prunes to the
 few cells each query touches; no shuffle of the big side beyond the join
 itself, and the query side is the small one (broadcastable).
+
+Sub-results with two consumers are materialized once instead of being
+recomputed per consumer: on the window path (any limit but a caller-asserted
+scalar 1) the round-1 rows (≤ limit per query) feed both the kept rows and
+the satisfied set, and with the OA fallback the OSM result feeds both the
+returned rows and the left-anti hit set. Both use
+``localCheckpoint(eager=True)``, so a call runs those jobs before it returns.
+Cluster caveat (as in forward.py): localCheckpoint truncates lineage, so
+blocks lost with an executor are not recomputable.
 """
 
 from __future__ import annotations
@@ -77,7 +86,12 @@ def reverse_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     largest exchange of the whole geocode_pages job) to rank rows of which
     one per query survives. Results are identical (pytest-pinned):
     row_number()==1 under (distance asc, id asc) is exactly min_by keyed on
-    struct(distance, id), and id is unique."""
+    struct(distance, id), and id is unique.
+
+    Eager: on the window path the call materializes the round-1 rows, and
+    with the fallback it materializes the OSM result (module docstring), so
+    the returned DataFrame reads those from executor blocks whose lineage is
+    truncated — an executor lost before the result is consumed loses them."""
     q = queries.select(
         "query_id",
         proj.merc_x_col(F.col("lon")).alias("qx"),
@@ -114,16 +128,20 @@ def _reverse_projected(spark, tables: GeocoderTables, q: DataFrame,
     # kNN would otherwise silently treat NULL as a 32 m search window.
     q = q.filter(F.col("radius").isNotNull())
 
-    osm = _reverse_osm(spark, tables, q, scalar_limit)
+    osm = _reverse_osm(spark, tables, q, scalar_limit).select(*RESULT_COLS)
     if not with_fallback or tables.oa is None:
-        return osm.select(*RESULT_COLS)
+        return osm
 
     # J11 source fallback: OA only for queries with zero OSM rows
-    # (osmgeocoder/reverse.py:52-63) — left-anti on the hit set
+    # (osmgeocoder/reverse.py:52-63) — left-anti on the hit set. The OSM
+    # result has two consumers (returned rows, hit set); column pruning
+    # gives them different exchanges, so a lazy plan would run the whole
+    # OSM kNN twice. Materialize it once (≤ limit rows per query).
+    osm = osm.localCheckpoint(eager=True)
     hits = osm.select("query_id").distinct()
     q_missed = q.join(hits, "query_id", "left_anti")
     oa = _reverse_oa(spark, tables, q_missed, scalar_limit)
-    return osm.select(*RESULT_COLS).unionByName(oa.select(*RESULT_COLS))
+    return osm.unionByName(oa.select(*RESULT_COLS))
 
 
 def _candidates(q: DataFrame, houses: DataFrame,
@@ -290,21 +308,25 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         cand = _unpack_top1(c1_keep.unionByName(c2))
     else:
         # ONE shuffle by query_id computes both the satisfaction count and
-        # the per-query rank; kept rows are truncated to `limit` right here
+        # the per-query rank; rows are truncated to `limit` right here
         # (their ordering within a satisfied query is final — see pre-rank
-        # argument below), so the union the tail re-ranks is tiny
+        # argument below) and materialized once, because c1_keep and
+        # sat_ids both consume them and a lazy plan would rerun the round-1
+        # join and window per consumer. A query with n1 >= limit >= 1
+        # keeps its rank-1 row, so sat_ids still holds every satisfied
+        # query; limit <= 0 or NULL keeps no row and returns no rows.
         _p = Window.partitionBy("query_id")
         c1 = (c1.withColumn("__n1", F.count("*").over(_p))
                 .withColumn("__r1rn", F.row_number().over(
-                    _p.orderBy(F.col("distance").asc(), F.col("id").asc()))))
+                    _p.orderBy(F.col("distance").asc(), F.col("id").asc())))
+                .filter(F.col("__r1rn") <= F.col("limit")).drop("__r1rn")
+                .localCheckpoint(eager=True))
         c1_keep = c1.filter(
-            ((F.col("__n1") >= F.col("limit")) | (F.col("radius") <= F.lit(G1_METERS)))
-            & (F.col("__r1rn") <= F.col("limit"))
-        ).drop("__n1", "__r1rn")
+            (F.col("__n1") >= F.col("limit")) | (F.col("radius") <= F.lit(G1_METERS))
+        ).drop("__n1")
 
         # --- round 2: full radius on the res-18 grid, only for queries
-        # round 1 could not complete (the two c1 consumers share one shuffle
-        # via ReuseExchange)
+        # round 1 could not complete
         sat_ids = c1.filter(F.col("__n1") >= F.col("limit")).select("query_id").distinct()
         q2 = q.filter(F.col("radius") > F.lit(G1_METERS)).join(sat_ids, "query_id", "left_anti")
         c2 = _candidates(q2, houses_slim) \

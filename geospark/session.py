@@ -19,7 +19,8 @@ def get_spark(app: str = "geospark", master: str | None = None,
     """``extra_conf``: additional spark conf pairs (e.g. the scaling harness
     passes executor-mode settings for ``local-cluster[N,1,mem]`` masters —
     separate executor JVMs, the faithful N-vs-4N-executors emulation)."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get("GEOSPARK_SHUFFLE_PARTITIONS", "32"))
     b = SparkSession.builder
     for k, v in (extra_conf or {}).items():

@@ -168,6 +168,14 @@ def main() -> None:
     # as the least-contaminated estimate of the engine's own cost.
     import statistics
 
+    # an oversubscribed big config measures core contention, not scaling
+    avail = len(os.sched_getaffinity(0))
+    if N_BIG > avail:
+        hint = (f"set GEOSPARK_SCALING_N to at most {avail // 4}" if avail >= 4
+                else "it needs at least 4")
+        sys.exit(f"bench_scaling: the big config needs 4 x {N_SMALL} = {N_BIG} "
+                 f"cores but this process may use {avail}; {hint}")
+
     # bounded wait-for-quiet before each worker launch (VERDICT r5 #1/#5:
     # don't launch a measurement into a co-tenant burst; BENCH_r05 itself
     # ran at launch load 5.27 and self-flagged). If the host never quiets

@@ -25,8 +25,7 @@ BENCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file
 
 
 def main(sf: float, n_q: int, runs: int) -> None:
-    os.environ.setdefault("GEOSPARK_DRIVER_MEM", "32g")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     load0 = round(os.getloadavg()[0], 2)
     from pyspark.sql import functions as F
 

@@ -104,6 +104,33 @@ def test_geocode_join_paths_have_no_cartesian(spark, geo):
     assert "CartesianProduct" not in rplan
 
 
+def test_reverse_plans_run_osm_knn_once(spark, geo):
+    """Every reverse sub-result with two consumers is materialized once.
+    Left lazy, the plan runs the round-1 candidate join once per consumer
+    (kept rows, satisfied set) and, with the OA fallback, the whole OSM kNN
+    once more for the left-anti hit set: 7 grid-key joins and 2 admin PIPs
+    per call. Only the OA kNN may remain in the returned plan. The
+    scalar-limit-1 path (the mining pipeline's call) stays lazy, with its
+    3 grid-key joins."""
+    import re
+
+    from geospark.reverse import reverse_geocode
+
+    def grid_joins(plan):
+        return len(re.findall(r"Join \[ix#", plan))
+
+    rq = spark.read.parquet("fixtures/rev_queries.parquet")
+    fb = _plan(reverse_geocode(spark, geo["tables"], rq))
+    assert grid_joins(fb) == 1
+    assert "_pip(" not in fb
+    assert grid_joins(_plan(reverse_geocode(spark, geo["tables"], rq,
+                                            with_fallback=False))) == 1
+    rq1 = rq.withColumn("limit", F.lit(1))
+    assert grid_joins(_plan(reverse_geocode(spark, geo["tables"], rq1,
+                                            with_fallback=False,
+                                            scalar_limit=1))) == 3
+
+
 def test_expansion_splitter_stays_jvm(spark):
     """The abbreviation expansion + address splitter must compile to chained
     JVM regexp ops inside whole-stage codegen — no Python/Arrow stage for a
