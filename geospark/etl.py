@@ -385,9 +385,7 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     # row-group skipping), secondary = id, which SPLITS mega-cells across
     # partitions instead of serializing ~45% of all rows into one task
     # (the fixture's Bigstadt cell is exactly that skew case)
-    import os as _os
-    n_parts = int(_os.environ.get("GEOSPARK_HOUSE_PARTS", 0)) \
-        or max(16, 2 * spark.sparkContext.defaultParallelism)
+    n_parts = max(16, 2 * spark.sparkContext.defaultParallelism)
     # barrier BEFORE the range partition: RangePartitioner's sampling pass
     # evaluates the child plan a second time — checkpointing first means the
     # cell/geohash kernels run once, and both the sample and the real

@@ -31,19 +31,19 @@ def metaphone_cols(col):
     return _m(col)
 
 
-def prepare_wordlist(wordlist: DataFrame, parts: int = 4) -> DataFrame:
+def prepare_wordlist(wordlist: DataFrame) -> DataFrame:
     """wordlist (word, ct) + metaphone codes — the engine's equivalent of the
     dmetaphone GIN indexes, materialized once at build time."""
     # compact to a few partitions: the wordlist is dimension-sized and every
-    # predict call scans it — 32 near-empty partitions just add task churn.
-    # Corpus-scale callers (10^6+ words) pass a larger ``parts`` so the
-    # metaphone pandas UDF parallelizes (scripts/predict_scale.py).
-    return wordlist.repartition(parts).withColumn("__m", metaphone_cols(F.col("word"))) \
+    # predict call scans it, so many near-empty partitions just add task
+    # churn (historical corpus-scale record: BENCH/predict_scale.json).
+    return wordlist.repartition(4).withColumn("__m", metaphone_cols(F.col("word"))) \
         .select("word", "ct", F.col("__m.dmet").alias("dmet"), F.col("__m.dmet_alt").alias("dmet_alt"))
 
 
-# Wordlist-size crossover for the value-space rewrite (measured,
-# BENCH/predict_scale.json + SCALE.md): value-space runs 0.72x the per-word
+# Wordlist-size crossover for the value-space rewrite (measured on the
+# 32-core host; the SCALE.md table holds all three sizes, and
+# BENCH/predict_scale.json the 928k-word run): value-space runs 0.72x the per-word
 # path's speed at 21k words (its two fan-back joins dominate in the
 # broadcast regime) and 1.70x / 2.42x FASTER at 438k / 928k words
 # (|distinct codes| << |words| pays off). Log-linear interpolation of the
@@ -59,10 +59,11 @@ def predict_text(spark, wordlist_m: DataFrame, queries: DataFrame, k: int = 10) 
     Dispatches on wordlist size (r6, VERDICT r5 #6): small wordlists take the
     per-word token join (``predict_text_per_word``), large ones the
     value-space rewrite below — both paths produce identical rows
-    (pytest-pinned at fixture scale; asserted at 10^6 words by
-    scripts/predict_scale.py). The size probe is a bounded
-    ``limit(T+1).count()`` — it scans at most T+1 rows, so it stays cheap at
-    corpus scale."""
+    (pinned at fixture scale by tests/test_properties.py::
+    test_predict_dispatch_paths_identical; the 928k-word run recorded in
+    BENCH/predict_scale.json checked equal row counts). The size probe is a
+    bounded ``limit(T+1).count()`` — it scans at most T+1 rows, so it stays
+    cheap at corpus scale."""
     if wordlist_m.limit(VALUE_SPACE_MIN_WORDS + 1).count() <= VALUE_SPACE_MIN_WORDS:
         return predict_text_per_word(spark, wordlist_m, queries, k)
     return predict_text_value_space(spark, wordlist_m, queries, k)

@@ -26,11 +26,13 @@ def main():
         # conversion, no tuned configs. The engine must work here too.
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[8]").appName("oracle-check-plain").getOrCreate()
+        from geospark.session import local_master
+
+        spark = SparkSession.builder.master(local_master()).appName("oracle-check-plain").getOrCreate()
     else:
         from geospark.session import get_spark
 
-        spark = get_spark("oracle-check", master="local[8]")
+        spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     parity.register_views(con, sf_dir)

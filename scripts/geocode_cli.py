@@ -25,7 +25,7 @@ def build_state(world: str | None):
     from geospark.session import get_spark
     from geospark import entry_queries as eq
 
-    spark = get_spark("geocode-cli", master="local[8]")
+    spark = get_spark("geocode-cli")
     spark.sparkContext.setLogLevel("ERROR")
     if world:
         eq.FIX = world  # point the engine state at another world dir

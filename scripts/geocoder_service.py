@@ -22,7 +22,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8080)
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from geospark import entry_queries as eq

@@ -50,7 +50,7 @@ def main(sf: float) -> None:
     from geospark.session import get_spark
     from geospark.tables import GeocoderTables
 
-    spark = get_spark("hn-multiplier", master=f"local[{len(os.sched_getaffinity(0))}]")
+    spark = get_spark("hn-multiplier")
     spark.sparkContext.setLogLevel("ERROR")
     world_dir = benchgen.ensure_bench_world(BENCH_ROOT, sf)
     osm = etl.load_osm_tables(spark, world_dir)

@@ -62,7 +62,7 @@ def main():
     from geospark import dedup
     from geospark.session import get_spark
 
-    spark = get_spark("simhash-stress", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', 32)}]")
+    spark = get_spark("simhash-stress")
     spark.sparkContext.setLogLevel("ERROR")
 
     sigs = synth_signatures(N_DOCS)

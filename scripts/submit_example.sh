@@ -7,7 +7,8 @@ cd "$(dirname "$0")/.."
 
 SF="${1:-0.05}"
 OUT="${2:-/tmp/geospark_submit_out}"
-MASTER="${SPARK_MASTER:-local[8]}"
+# default: local[N] over the cores this shell may use (nproc honours affinity)
+MASTER="${SPARK_MASTER:-local[$(nproc)]}"
 
 mkdir -p dist
 rm -f dist/geospark.zip

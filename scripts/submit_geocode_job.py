@@ -13,7 +13,7 @@ Usage (cluster):
         --world /data/world --pages /data/webpages.parquet --out /data/out
 
 Locally, scripts/submit_example.sh packages the zip and smoke-runs this on
-local[8] against a generated bench world.
+local[<nproc>] against a generated bench world.
 """
 
 from __future__ import annotations

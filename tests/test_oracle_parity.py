@@ -1,5 +1,5 @@
 """Driver-gate replica on a representative query subset at sf0.001
-(the full 36-query sweep runs via scripts/check_oracles.py at sf0.01)."""
+(the full 50-query sweep runs via scripts/check_oracles.py at sf0.01)."""
 
 import duckdb
 import pytest

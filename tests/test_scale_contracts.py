@@ -1,6 +1,10 @@
 """Scale-shape contracts from the round-1 verdict: bucketed pair generation
 (no CartesianProduct), pigeonhole-exact simhash banding, NULL-radius reverse
-semantics, and cache hygiene of the geocode entry points."""
+semantics, and cache hygiene of the geocode entry points; plus two source
+scans: the ``GEOSPARK_*`` env knob set, and no citation of a missing script."""
+
+import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -199,3 +203,30 @@ def test_simhash_recursive_identical_cluster_and_h0(spark):
                    sdf, h, hot_threshold=30, max_depth=depth).collect()}
         assert rec == base and len(base) >= n_dup_pairs, (h, len(base), len(rec))
     sdf.unpersist()
+
+
+_ROOT = Path(__file__).resolve().parents[1]
+_SCRIPTS = [f for f in _ROOT.glob("scripts/*") if f.is_file()]
+
+
+def test_env_knobs_are_the_three_session_settings():
+    """Source scan, no Spark: the only ``GEOSPARK_*`` environment knobs are
+    the three session settings ``get_spark`` reads. A new knob has to
+    replace one of these, not add to them."""
+    files = [*_ROOT.glob("geospark/*.py"), *_SCRIPTS, _ROOT / "bench.py"]
+    knobs = {k for f in files for k in re.findall(r"GEOSPARK_[A-Z_]+", f.read_text())}
+    assert knobs == {"GEOSPARK_DRIVER_MEM", "GEOSPARK_JAVA_OPTS",
+                     "GEOSPARK_SHUFFLE_PARTITIONS"}
+
+
+def test_cited_scripts_exist():
+    """Every ``scripts/<name>.py|.sh`` path cited by the living docs, the
+    engine modules and the scripts themselves names a file that exists."""
+    files = [_ROOT / "README.md", _ROOT / "SCALE.md", _ROOT / "BENCH" / "BASELINE.md",
+             _ROOT / ".claude" / "skills" / "verify" / "SKILL.md",
+             *_ROOT.glob("geospark/*.py"), *_SCRIPTS]
+    missing = sorted({(f.relative_to(_ROOT).as_posix(), cited)
+                      for f in files
+                      for cited in re.findall(r"scripts/\w+\.(?:py|sh)\b", f.read_text())
+                      if not (_ROOT / cited).is_file()})
+    assert not missing, missing
