@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from . import proj, spatial
-from .reverse import ZERO_UUID, _admin_cols, _pack_candidates, _top1_per_query, _unpack_top1
+from .reverse import ZERO_UUID, _admin_cols, _top1_per_query
 from .tables import (GeocoderTables, prefix_probe, sim_from_arrays, sim_ge_arrays,
                      trigram_tokens_col)
 
@@ -306,14 +306,12 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     # top-`limit` houses in this pre-admin ordering — provably identical
     # results while bounding the PIP/window input to limit×queries rows
     if scalar_limit == 1:
-        # pack the candidate rows for the partial sort (reverse's skinny,
-        # binary-id pack plus trgm_dist): the country/cx/cy/radius/limit
-        # columns are dead here — the residual filters above consumed them.
-        # ~232 -> ~144 B per sorted row. The ids come back as hex (≤1 row
-        # per query from here on) for the post-PIP re-aggregation tiebreak
-        # and the decorate join on street_id.
-        cand = _unpack_top1(_top1_forward(_pack_candidates(cand, "trgm_dist"),
-                                          with_admin=False))
+        # only the payload used after the aggregate rides through its
+        # partial sort: the country/cx/cy/radius/limit columns are dead
+        # here — the residual filters above consumed them
+        cand = _top1_forward(cand.select("query_id", "id", "street_id", "house_number",
+                                         "x", "y", "distance", "trgm_dist"),
+                             with_admin=False)
     else:
         pre_w = Window.partitionBy("query_id").orderBy(
             F.col("distance").asc_nulls_last(), F.col("trgm_dist").asc(), F.col("id").asc())

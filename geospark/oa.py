@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StringType
 
 from . import proj, text
-from .etl import GRID_JOIN_RES, cell_col_jvm, geohash_col, grid_cols
+from .etl import GRID_JOIN_RES, cell_col_jvm, geohash_col_jvm, grid_cols
 
 
 def title_col(col):
@@ -147,7 +147,7 @@ def build_oa_tables(spark: SparkSession, raw: DataFrame, license_text: bytes) ->
             F.lit("openaddresses.io").alias("source"),
         )
         .withColumn("cell_id", cell_col_jvm(F.col("x"), F.col("y")))
-        .withColumn("geohash", geohash_col(F.col("x"), F.col("y")))
+        .withColumn("geohash", geohash_col_jvm(F.col("x"), F.col("y")))
     )
     gx, gy = grid_cols(F.col("x"), F.col("y"), GRID_JOIN_RES)
     oa_house = oa_house.withColumn("ix", gx).withColumn("iy", gy)

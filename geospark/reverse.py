@@ -223,44 +223,6 @@ def _top1_per_query(cand: DataFrame, *key) -> DataFrame:
     return cand.groupBy("query_id").agg(best).select("query_id", "__best.*")
 
 
-def _pack_candidates(cand: DataFrame, *extra: str) -> DataFrame:
-    """Skinny, binary-keyed candidate rows for the top-1 partial
-    SortAggregate (guide §2.3: move fewer bytes — here the bytes are
-    partition-locally SORTED, and at scale spilled: the sf8 root-cause was
-    superlinear sort-spill bandwidth, 59 GiB per partial). Two levers:
-
-    * PROJECT EARLY: only columns consumed downstream of the aggregate
-      survive; qx/qy/ix/iy (and radius/limit for non-literal callers) die
-      here instead of riding through the sort.
-    * BINARY KEYS: the two 64-char sha256 hex ids travel as BINARY(32).
-      unhex is exact (ids are lowercase hex by construction, etl._id) and
-      ORDER-monotone: each byte maps to two hex digits, and the hex
-      alphabet 0-9a-f is ASCII-increasing in nibble order, so unsigned
-      bytewise comparison of unhex(a)/unhex(b) at equal length orders
-      exactly like lexicographic a/b — min_by keyed on
-      struct(distance, binary id) picks the SAME winner as the hex form
-      (pytest-pinned, test_top1_binary_key_order_equivalence).
-
-    ``extra`` names further payload columns the caller's top-1 key or
-    output needs (forward adds ``trgm_dist``).
-
-    UnsafeRow arithmetic: 11 fields * 8 B + 64 + 64 + ~8 (hn) = ~232 B/row
-    before; 7 * 8 + 32 + 32 + 8 = ~136 B/row after (−41% sorted bytes)."""
-    return cand.select(
-        "query_id", F.unhex("id").alias("id"),
-        F.unhex("street_id").alias("street_id"),
-        "house_number", "x", "y", "distance", *extra)
-
-
-def _unpack_top1(df: DataFrame) -> DataFrame:
-    """Restore the hex ids after the top-1 aggregate (≤1 row per query per
-    round there — conversion cost is nil). lower(hex()) is the exact
-    inverse of unhex for lowercase-hex inputs (Spark hex() emits
-    uppercase)."""
-    return df.withColumn("id", F.lower(F.hex("id"))) \
-             .withColumn("street_id", F.lower(F.hex("street_id")))
-
-
 def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
                  scalar_limit: int | None = None) -> DataFrame:
     # SKINNY candidate rows through every shuffle: only join/rank columns
@@ -270,8 +232,6 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
     # pre-rank LEFT SEMI is count-equivalent to the reference's inner join
     # and the decorate-after-top-k rewrite is exact). Measured: the fat rows
     # spilled 7.7 GB through the round-1 window at bench sf1.0.
-    houses_slim = tables.houses.select("id", "house_number", "x", "y",
-                                       "street_id", "ix", "iy")
     street_keys = tables.street_city.select("street_id")
 
     # --- round 1: fine-grid probe within g1 = min(G1_METERS, radius) -------
@@ -282,7 +242,7 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
     # dangling street_id row must not count toward satisfaction.
     c1 = _candidates(
         q.withColumn("__r1", F.least(F.lit(G1_METERS), F.col("radius"))),
-        houses_slim, radius_col="__r1", res=G1_RES,
+        tables.houses, radius_col="__r1", res=G1_RES,
     ).drop("__r1").join(F.broadcast(street_keys), "street_id", "left_semi")
 
     if scalar_limit == 1:
@@ -294,18 +254,20 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         # below is a no-op (<=1 row per query per round, rounds disjoint) —
         # both giant query_id exchanges (4.2 GB + 1.2 GB at bench sf4.0)
         # disappear; only per-(query, partition) partial rows shuffle.
-        # Candidates are packed (skinny + binary ids) through the partial
-        # sort; sat_ids prunes c1_keep to its GROUPING key, so that branch
-        # plans as a spill-free hash distinct instead of a second full
-        # candidate sort (see _top1_per_query / _pack_candidates).
-        c1_keep = _top1_per_query(_pack_candidates(c1))
+        # Only the payload used after the aggregate rides through its
+        # partial sort (qx/qy/ix/iy/radius/limit die here); sat_ids prunes
+        # c1_keep to its GROUPING key, so that branch plans as a spill-free
+        # hash distinct instead of a second full candidate sort (see
+        # _top1_per_query).
+        payload = ("query_id", "id", "street_id", "house_number", "x", "y", "distance")
+        c1_keep = _top1_per_query(c1.select(*payload))
         sat_ids = c1_keep.select("query_id")
         q2 = q.filter(F.col("radius") > F.lit(G1_METERS)) \
             .join(sat_ids, "query_id", "left_anti")
-        c2 = _top1_per_query(_pack_candidates(
-            _candidates(q2, houses_slim)
-            .join(F.broadcast(street_keys), "street_id", "left_semi")))
-        cand = _unpack_top1(c1_keep.unionByName(c2))
+        c2 = _top1_per_query(
+            _candidates(q2, tables.houses)
+            .join(F.broadcast(street_keys), "street_id", "left_semi").select(*payload))
+        cand = c1_keep.unionByName(c2)
     else:
         # ONE shuffle by query_id computes both the satisfaction count and
         # the per-query rank; rows are truncated to `limit` right here
@@ -329,7 +291,7 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         # round 1 could not complete
         sat_ids = c1.filter(F.col("__n1") >= F.col("limit")).select("query_id").distinct()
         q2 = q.filter(F.col("radius") > F.lit(G1_METERS)).join(sat_ids, "query_id", "left_anti")
-        c2 = _candidates(q2, houses_slim) \
+        c2 = _candidates(q2, tables.houses) \
             .join(F.broadcast(street_keys), "street_id", "left_semi")
 
         cand = c1_keep.unionByName(c2)
@@ -345,8 +307,8 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         F.col("id").asc(), F.col("a4_name").asc_nulls_last(), F.col("a6_name").asc_nulls_last(),
     )
     # scalar mode: the caller asserts limit == 1 for every row (the same
-    # contract the top-1 aggregates rely on), and the packed candidates no
-    # longer carry the constant column — compare against the literal.
+    # contract the top-1 aggregates rely on), and the top-1 payload no
+    # longer carries the constant column — compare against the literal.
     limit_expr = F.lit(1) if scalar_limit == 1 else F.col("limit")
     return (
         cand.withColumn("__rn", F.row_number().over(w))

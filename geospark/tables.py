@@ -6,16 +6,40 @@ PreparedPolygons per admin_level), the pre-joined street->city dimension
 and house numbers (the "GIN trigram index" re-materialized as data,
 SURVEY.md X3), and optional OpenAddresses tables. Everything query
 functions need, built once.
+
+The bundle owns the id format of the geocoder: house ids and street ids
+(``houses.id``/``street_id``, ``houses_ranked``, ``street_city.street_id``)
+are BINARY(32), converted once from the ETL's sha256 hex keys
+(``_binary_id``). The struct tables, the OA tables and every geocoder
+output column keep hex ids or carry none.
 """
 
 from __future__ import annotations
 
-import concurrent.futures
 from fractions import Fraction
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import spatial, text
+from .etl import _materialize
+
+
+def _binary_id(name: str):
+    """Column: the etl._id key ``name`` as BINARY(32). NULL stays NULL
+    (orphan houses have no street_id, and the street joins drop them); a
+    lowercase 64-digit hex value is unhexed; anything else fails the
+    query with the column name and the value, instead of becoming a NULL
+    that would silently win every id tiebreak.
+
+    The conversion keeps every id ordering: each byte is two hex digits and
+    0-9a-f is ASCII-increasing in nibble order, so unsigned bytewise
+    comparison of unhex(a) and unhex(b) orders exactly like lexicographic
+    comparison of the lowercase hex strings a and b. Spark compares BINARY
+    unsigned, so min_by and window sorts keyed on a binary id pick the
+    winners the hex form would (test_top1_binary_key_order_equivalence)."""
+    c = F.col(name)
+    return (F.when(c.isNull() | c.rlike("^[0-9a-f]{64}$"), F.unhex(c))
+            .otherwise(F.raise_error(F.concat(F.lit(f"non-hex {name}: "), c))))
 
 
 def trigram_tokens_col(col):
@@ -147,7 +171,10 @@ class GeocoderTables:
     def __init__(self, spark: SparkSession, struct: dict, osm_admin: DataFrame,
                  oa: dict | None = None, wordlist: DataFrame | None = None):
         self.spark = spark
-        self.houses = struct["struct_house"]
+        # the geocoders' projection of struct_house, keyed by binary ids
+        self.houses = struct["struct_house"].select(
+            _binary_id("id").alias("id"), "house_number", "x", "y",
+            _binary_id("street_id").alias("street_id"), "ix", "iy")
         self.streets = struct["struct_streets"]
         self.cities = struct["struct_cities"]
         self.admin = osm_admin
@@ -158,7 +185,7 @@ class GeocoderTables:
         # city/postcode trigram arrays materialized once (GIN-as-data) so the
         # residual % predicates only do array_intersect at join time
         self.street_city = (
-            self.streets.select(F.col("id").alias("street_id"), F.col("name").alias("road"),
+            self.streets.select(_binary_id("id").alias("street_id"), F.col("name").alias("road"),
                                 F.col("city_id"))
             .join(F.broadcast(self.cities.select(F.col("id").alias("__cid"),
                                                  F.col("name").alias("city_name"),
@@ -207,29 +234,16 @@ class GeocoderTables:
         self.hn_gram_df = self.hn_gram_df.cache()
         self.hn_value_prefix = self.hn_value_prefix.cache()
         self.houses_ranked = self.houses_ranked.cache()
-        # Eager CONCURRENT materialization (guide §2.6): every consumer
-        # touches all of these, and materializing them one .count() at a
-        # time was ~10 sequential scheduler round-trips of mostly-idle
-        # executors (r6 etl profile: ~3.5 s of the 19.5 s etl_build).
-        # Chains keep cache dependencies ordered (the prefix indexes
-        # join their own gram-df), independent chains overlap.
-        chains = [
+        # Eager materialization: every consumer touches all of these, and
+        # the id checks of _binary_id run here, at build. Chains keep cache
+        # dependencies ordered (the prefix indexes join their own gram-df).
+        _materialize([
             ("houses", (self.houses,)),
             ("street_city", (self.street_city,)),
             ("street_grams", (self.street_gram_df, self.street_name_prefix)),
             ("hn_grams", (self.hn_gram_df, self.hn_value_prefix)),
             ("houses_ranked", (self.houses_ranked,)),
-        ]
-
-        def _mat(named):
-            name, chain = named
-            spark.sparkContext.setJobDescription(f"eager tables build: {name}")
-            for df in chain:
-                df.count()
-            spark.sparkContext.setJobDescription(None)
-
-        with concurrent.futures.ThreadPoolExecutor(max_workers=len(chains)) as pool:
-            list(pool.map(_mat, chains))
+        ])
 
     def prepared_admin(self, level: int) -> spatial.PreparedPolygons:
         return self._prepared[level]

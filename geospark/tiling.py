@@ -135,7 +135,7 @@ def tiled_pip_join(spark, points: DataFrame, polys: DataFrame, res: int,
     broadcast: polygons explode to covering cells (a DataFrame), points get a
     cell id, equi-join on cell, exact PIP verification per pair via an
     Arrow kernel. Complements spatial.pip_join (the broadcast path)."""
-    from .etl import cell_col as make_cell_col
+    from .etl import cell_col_jvm
     from pyspark.sql.types import BooleanType
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -149,7 +149,7 @@ def tiled_pip_join(spark, points: DataFrame, polys: DataFrame, res: int,
         F.col(id_key).alias("__pid"), F.col(attr_key).alias("__attr"), F.col(rings_key).alias("__rings"),
         F.explode(_cov(F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))).alias("__cell"))
 
-    pts = points.withColumn("__cell", make_cell_col(F.col(x_col), F.col(y_col), res))
+    pts = points.withColumn("__cell", cell_col_jvm(F.col(x_col), F.col(y_col), res))
 
     @F.pandas_udf(BooleanType())
     def _verify(pid: pd.Series, x: pd.Series, y: pd.Series, rings: pd.Series) -> pd.Series:

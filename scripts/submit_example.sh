@@ -25,7 +25,7 @@ WORLD=$(echo "$WORLD" | tail -1)
 rm -rf "$OUT"
 exec /opt/spark/bin/spark-submit \
     --master "$MASTER" \
-    --driver-memory 16g \
+    --driver-memory "${GEOSPARK_DRIVER_MEM:-8g}" \
     --py-files dist/geospark.zip \
     scripts/submit_geocode_job.py \
     --world "$WORLD" --pages "$WORLD/webpages.parquet" --out "$OUT"

@@ -33,11 +33,11 @@ def test_content_derived_ids_are_stable(geo):
 
 
 def test_struct_ids_are_lowercase_sha256_hex(geo):
-    """The top-1 paths carry ``id``/``street_id`` as unhex()'d BINARY(32)
-    (reverse._pack_candidates): unhex turns a non-hex id into NULL, which
-    would silently reorder min_by winners. Pin the contract the pack relies
-    on: every id is 64 lowercase hex digits (street_id is NULL only for
-    orphan houses, which never reach the pack)."""
+    """The struct tables keep ``id``/``street_id`` as sha256 hex, and
+    GeocoderTables converts them to BINARY(32) at build (tables._binary_id),
+    failing on any other value. Pin the format that conversion accepts:
+    every id is 64 lowercase hex digits (street_id is NULL only for orphan
+    houses, which the street joins drop)."""
     hex64 = "^[0-9a-f]{64}$"
     for name, df in geo["struct"].items():
         assert df.filter(F.col("id").isNull() | ~F.col("id").rlike(hex64)).count() == 0, name

@@ -187,31 +187,58 @@ def test_forward_scalar_limit1_agg_path_equivalence(spark, geo):
 
 
 def test_top1_binary_key_order_equivalence(spark):
-    """The packed top-1 path (r6: _pack_candidates carries the sha256 hex
-    ids as BINARY(32) through the partial SortAggregate) must pick the SAME
-    winners as the hex-string form. Ids are chosen adversarially: distances
+    """GeocoderTables keys houses and streets by BINARY(32) ids
+    (tables._binary_id), so the top-1 aggregates (min_by) and the ranking
+    windows (row_number) tiebreak on binary ids. Both must pick the SAME
+    winners as on the hex strings. Ids are chosen adversarially: distances
     tie exactly, forcing the id tiebreak, and the leading bytes straddle
     0x7f/0x80 and 0x00/0xff — a SIGNED bytewise binary comparison would
     invert those pairs, so this pins the required UNSIGNED ordering (which
     is order-isomorphic to lexicographic lowercase-hex comparison)."""
-    from geospark.reverse import _pack_candidates, _top1_per_query, _unpack_top1
+    from pyspark.sql import Window
+
+    from geospark.reverse import _top1_per_query
+    from geospark.tables import _binary_id
 
     pairs = [("7f" + "0" * 62, "80" + "0" * 62),   # signed flip at 0x7f/0x80
              ("ff" + "e" * 62, "00" + "e" * 62),   # signed flip at 0xff/0x00
              ("0a" + "b" * 62, "a0" + "b" * 62)]   # digit-vs-letter nibble
     street = "c3" * 32
-    rows = [(qid, hid, street, str(qid), 1.0 * qid, 2.0 * qid, 7.5)
+    rows = [(qid, hid, street, 7.5)
             for qid, (a, b) in enumerate(pairs, start=1) for hid in (a, b)]
-    cand = spark.createDataFrame(
-        rows, "query_id long, id string, street_id string, house_number string, "
-              "x double, y double, distance double")
-    hex_rows = sorted(map(tuple, _top1_per_query(cand)
-                          .select(*cand.columns).collect()))
-    bin_rows = sorted(map(tuple, _unpack_top1(_top1_per_query(_pack_candidates(cand)))
-                          .select(*cand.columns).collect()))
-    assert hex_rows == bin_rows
-    # and the winner is the hex-lexicographic minimum of each tied pair
-    assert [r[1] for r in hex_rows] == [min(a, b) for a, b in pairs]
+    hex_cand = spark.createDataFrame(
+        rows, "query_id long, id string, street_id string, distance double")
+    bin_cand = hex_cand.select("query_id", _binary_id("id").alias("id"),
+                               _binary_id("street_id").alias("street_id"), "distance")
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("id").asc())
+
+    def winners(df):
+        return {r.query_id: r.id if isinstance(r.id, str) else bytes(r.id).hex()
+                for r in df.collect()}
+
+    # the winner is the hex-lexicographic minimum of each tied pair
+    want = {qid: min(a, b) for qid, (a, b) in enumerate(pairs, start=1)}
+    for cand in (hex_cand, bin_cand):
+        assert winners(_top1_per_query(cand)) == want
+        assert winners(cand.withColumn("__rn", F.row_number().over(w))
+                       .filter(F.col("__rn") == 1)) == want
+
+
+def test_tables_reject_non_hex_ids(spark, geo):
+    """GeocoderTables converts the hex ids to BINARY(32) once, at build: a
+    house id or street id that is not 64 lowercase hex digits fails the
+    build instead of becoming a NULL that wins every id tiebreak."""
+    from geospark.tables import GeocoderTables
+
+    struct = geo["struct"]
+    admin = geo["osm"]["osm_admin"]
+    for table in ("struct_house", "struct_streets"):
+        df = struct[table]
+        bad = df.select("id").orderBy("id").first().id
+        broken = df.withColumn("id", F.when(F.col("id") == bad, F.lit("zz" + bad[2:]))
+                               .otherwise(F.col("id")))
+        with pytest.raises(Exception, match="non-hex id: zz" + bad[2:]):
+            GeocoderTables(spark, {**struct, table: broken}, admin)
 
 
 def test_sim_ge_arrays_matches_threshold_form(spark):

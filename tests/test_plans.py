@@ -131,6 +131,63 @@ def test_reverse_plans_run_osm_knn_once(spark, geo):
                                             scalar_limit=1))) == 3
 
 
+def _own_nodes(df) -> str:
+    """The optimized plan, one line per node, with every cached relation a
+    leaf: unlike the plan strings, no InMemoryRelation prints the plan that
+    filled its cache."""
+    def walk(node):
+        yield node.simpleString(1000)
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    return "\n".join(walk(df._jdf.queryExecution().optimizedPlan()))
+
+
+def test_geocode_plans_carry_no_hex_conversion(spark, geo, monkeypatch):
+    """GeocoderTables converts the hex ids to BINARY(32) once, at build, so
+    no geocoder plan converts ids between hex and binary per query: no
+    unhex( or hex( in the plans of reverse, forward and geocode_pages,
+    top-1 (scalar_limit=1) paths included. The build's own conversion sits
+    behind the cached relations these plans scan."""
+    from geospark import mine
+    from geospark.forward import forward_geocode
+    from geospark.reverse import reverse_geocode
+
+    def no_hex(df):
+        plan = _own_nodes(df)
+        assert "InMemoryRelation" in plan and "hex(" not in plan
+
+    rq = spark.read.parquet("fixtures/rev_queries.parquet")
+    no_hex(reverse_geocode(spark, geo["tables"], rq, with_fallback=False))
+    no_hex(reverse_geocode(spark, geo["tables"], rq.withColumn("limit", F.lit(1)),
+                           with_fallback=False, scalar_limit=1))
+
+    fq = spark.read.parquet("fixtures/fwd_queries.parquet")
+    persists: list = []
+    no_hex(forward_geocode(spark, geo["tables"], fq, materialize=False,
+                           persist_registry=persists))
+    no_hex(forward_geocode(spark, geo["tables"], fq.withColumn("limit", F.lit(1)),
+                           materialize=False, persist_registry=persists, scalar_limit=1))
+    for cached in persists:
+        cached.unpersist()
+
+    # geocode_pages returns its eager checkpoint: pin what it checkpoints
+    pages = spark.read.parquet("fixtures/webpages.parquet").limit(200)
+    checkpointed = []
+    checkpoint = type(pages).localCheckpoint
+
+    def spy(df, eager=True):
+        checkpointed.append(df)
+        return checkpoint(df, eager)
+
+    monkeypatch.setattr(type(pages), "localCheckpoint", spy)
+    mine.geocode_pages(spark, geo["tables"], pages)
+    assert checkpointed
+    for df in checkpointed:
+        no_hex(df)
+
+
 def test_expansion_splitter_stays_jvm(spark):
     """The abbreviation expansion + address splitter must compile to chained
     JVM regexp ops inside whole-stage codegen — no Python/Arrow stage for a

@@ -88,11 +88,14 @@ def test_cell_col_jvm_matches_arrow_kernel(spark):
     rows = [(i, rng.uniform(-L, L), rng.uniform(-L, L)) for i in range(2000)]
     rows += [(9001, -L, -L), (9002, L, L), (9003, 0.0, 0.0), (9004, L - 1e-6, -L)]
     df = spark.createDataFrame(rows, "i long, x double, y double")
-    out = df.select(
-        etl.cell_col(F.col("x"), F.col("y")).alias("kernel"),
-        etl.cell_col_jvm(F.col("x"), F.col("y")).alias("jvm"),
-    ).filter(F.col("kernel") != F.col("jvm"))
-    assert out.count() == 0
+    # the house-table res 15, and the res 6 and 8 tiling.tiled_pip_join is
+    # called with (raster.zonal_stats defaults tile_res to 8)
+    for res in (15, 6, 8):
+        out = df.select(
+            etl.cell_col(F.col("x"), F.col("y"), res).alias("kernel"),
+            etl.cell_col_jvm(F.col("x"), F.col("y"), res).alias("jvm"),
+        ).filter(F.col("kernel") != F.col("jvm"))
+        assert out.count() == 0, res
 
 
 def test_reverse_null_radius_yields_no_rows(spark, geo):
