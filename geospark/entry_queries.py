@@ -94,7 +94,7 @@ class _GeoState:
 
     def _build_tables(self):
         return GeocoderTables(self.spark, self["struct"], self["osm"]["osm_admin"],
-                              oa=self._oa_or_none(), wordlist=self["wordlist"])
+                              oa=self._oa_or_none())
 
 
 def geo_state(spark):

@@ -218,27 +218,26 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     )
 
     # ONE dimension-sized collect for every polygon family this build needs
-    # (postal for 002 + 004, admin 8/6 for 005): previously three separate
-    # collect jobs plus pip_join's internal fourth — four scheduler
-    # round-trips for a few hundred rows each (r6 serial-floor work,
-    # guide §1.2/§5: the driver should do almost no data work, and what it
-    # does should batch).
+    # (postal for 002 + 004, admin 8/6 for 005, admin 6/4/2 for the houses'
+    # admin arrays): previously three separate collect jobs plus pip_join's
+    # internal fourth — four scheduler round-trips for a few hundred rows
+    # each (r6 serial-floor work, guide §1.2/§5: the driver should do almost
+    # no data work, and what it does should batch). Admin-2 matches are
+    # osm_ids (the country filter's key; names may repeat), the rest names.
     poly_rows = (
         postal.select(F.lit(0).alias("__lvl"), "osm_id",
                       F.col("postcode").alias("__attr"), "rings")
         .unionByName(
-            admin.filter(F.col("admin_level").isin([8, 6]))
+            admin.filter(F.col("admin_level").isin([8, 6, 4, 2]))
             .select(F.col("admin_level").alias("__lvl"), "osm_id",
-                    F.col("name").alias("__attr"), "rings"))
+                    F.when(F.col("admin_level") == 2, F.col("osm_id").cast("string"))
+                    .otherwise(F.col("name")).alias("__attr"), "rings"))
     ).collect()
     by_lvl: dict[int, list] = {}
     for r in poly_rows:
         by_lvl.setdefault(r["__lvl"], []).append(r)
-    preps = {
-        "pc": spatial.prepare_from_rows(by_lvl.get(0, []), attr_key="__attr"),
-        "a8": spatial.prepare_from_rows(by_lvl.get(8, []), attr_key="__attr"),
-        "a6": spatial.prepare_from_rows(by_lvl.get(6, []), attr_key="__attr"),
-    }
+    preps = {key: spatial.prepare_from_rows(by_lvl.get(lvl, []), attr_key="__attr")
+             for key, lvl in (("pc", 0), ("a8", 8), ("a6", 6), ("a4", 4), ("a2", 2))}
 
     # --- 002: buildings with house numbers, centroid within postal polygon -
     # (reuses the prepared postal polygons — the old pip_join call collected
@@ -258,13 +257,16 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     houses = houses.unionByName(bld_in_postal)
 
     # --- 004 + 005: fill postcode (postal PIP), then city from admin_level
-    # 8 then 6 — the three probes share identical (x, y), so ONE Arrow pass
-    # computes all three match sets (multi_pip_match_col); the sequential
+    # 8 then 6 — the probes share identical (x, y), so ONE Arrow pass
+    # computes all five match sets (multi_pip_match_col); the sequential
     # UPDATE semantics live in the chained column expressions (each
     # condition reads the PREVIOUS fill's output, exactly like the SQL
     # UPDATE order; the match values themselves depend only on x/y).
     # Reference UPDATEs take an arbitrary polygon on overlap; we take the
-    # min-osm_id winner (pip attrs are ordered by polygon id — §7.4.3)
+    # min-osm_id winner (pip attrs are ordered by polygon id — §7.4.3).
+    # Houses keep their full a2/a4/a6 match arrays: the geocoders read them
+    # in place of the reference's per-query ST_Contains (004:82-83,
+    # 003:112,260,405), and explode_outer restores the LEFT JOIN multiplicity.
     houses = houses.withColumn(
         "__pip", spatial.multi_pip_match_col(spark, preps, "x", "y"))
     houses = houses.withColumn(
@@ -278,7 +280,9 @@ def build_struct_tables(spark: SparkSession, osm: dict,
             F.when((F.col("city") == "") & (F.col("postcode") != "")
                    & F.get(f"__pip.{key}", 0).isNotNull(),
                    F.get(f"__pip.{key}", 0)).otherwise(F.col("city")))
-    houses = houses.drop("__pip")
+    houses = houses.withColumn("a2_ids", F.col("__pip.a2").cast("array<bigint>")) \
+        .withColumn("a4_names", F.col("__pip.a4")) \
+        .withColumn("a6_names", F.col("__pip.a6")).drop("__pip")
 
     # stage barrier (see _barrier): freeze UDF-filled keys before hashing
     houses = _barrier(houses)
@@ -375,6 +379,7 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     gx, gy = grid_cols(F.col("x"), F.col("y"), GRID_JOIN_RES)
     struct_house = houses.select(
         "id", "osm_id", "house_number", "x", "y", "street_id",
+        "a2_ids", "a4_names", "a6_names",
     ).withColumn("cell_id", cell_col_jvm(F.col("x"), F.col("y"))) \
      .withColumn("ix", gx).withColumn("iy", gy) \
      .withColumn("geohash", geohash_col_jvm(F.col("x"), F.col("y")))

@@ -18,8 +18,9 @@ the country branch (003:143-155), re-expressed per the north_star as a
      arrays PRECOMPUTED per side (GIN-index-as-data; never rebuilt inside
      join conditions).
   3. the country restriction resolves the batch's distinct country terms
-     driver-side into ONE prepared polygon set (R1's loop-invariant
-     hoisting -> broadcast) and probes it with the shared vectorized PIP.
+     to admin-2 osm_ids by the same prefix join (_resolve_countries),
+     broadcasts them (R1's loop-invariant hoisting) and keeps a row iff its
+     house's admin-2 array (houses.a2_ids) holds its term's id.
   4. ranking: ORDER BY distance ASC NULLS LAST (Postgres ASC default —
      Spark needs asc_nulls_last, §7.4.2), then trigram distance, then stable
      tiebreaks; row_number() <= limit per query (O1).
@@ -33,8 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from . import proj, spatial
-from .reverse import ZERO_UUID, _admin_cols, _top1_per_query
+from . import proj
+from .reverse import ZERO_UUID, _admin_cols, _admin_min, _top1_per_query
 from .tables import (GeocoderTables, prefix_probe, sim_from_arrays, sim_ge_arrays,
                      trigram_tokens_col)
 
@@ -55,27 +56,23 @@ def _street_candidates(tables: GeocoderTables, road_terms: DataFrame) -> DataFra
             .distinct())
 
 
-def _country_filter(spark, tables: GeocoderTables, cand: DataFrame,
-                    cand_qs: DataFrame) -> DataFrame:
-    """Country containment (with-country variants 003:112,260,405) with
-    driver-prefetched polygons (R1): the batch's distinct country terms
-    (read from the persisted query x street candidates ``cand_qs``, not the
-    raw query plan, which may be an expensive page scan) resolve to ONE
-    prepared set whose attrs are the terms, probed once per row. Rows with
-    NULL country pass; rows whose term resolved to no polygon fail
-    (ST_Within against NULL is false): their term is in no match array."""
-    countries = [r[0] for r in cand_qs.select("country").where("country is not null")
-                 .distinct().collect()]
-    if not countries:
-        # batch-level constant folding (R4): no country terms in this batch
-        # -> no Arrow stage at all
-        return cand
-    pip = spatial.multi_pip_match_col(
-        spark, {"c": tables.country_polygons(countries)}, "x", "y")
-    return (cand.withColumn("__pip", pip)
-            .filter(F.col("country").isNull()
-                    | F.array_contains(F.col("__pip.c"), F.col("country")))
-            .drop("__pip"))
+def _resolve_countries(tables: GeocoderTables, terms: DataFrame) -> DataFrame:
+    """_geocode_get_country_polygon (003-forward_geocoding.sql:6-14) for the
+    distinct ``terms.country`` strings, as rows (country, a2_id): the
+    admin-2 osm_id whose name matches the term under pg_trgm ``%``. The
+    reference returns an arbitrary matching row; we take argmax(similarity)
+    with (name, osm_id) tiebreak (§7.4.3b). A term that passes no name's
+    threshold gets no row."""
+    pairs = prefix_probe(terms.select("country").where(F.col("country").isNotNull()),
+                         "country", tables.country_gram_df, tables.country_name_prefix,
+                         "name")
+    best = F.min(F.struct((-F.col("sim")).alias("neg_sim"), "name", "osm_id"))
+    return (pairs.select("country", "name",
+                         sim_from_arrays(F.col("country_t"), F.col("name_t")).alias("sim"))
+            .distinct()
+            .join(F.broadcast(tables.country_ids), "name")
+            .groupBy("country").agg(best.alias("__best"))
+            .select("country", F.col("__best.osm_id").alias("a2_id")))
 
 
 def split_address_cols(df: DataFrame, term_col: str = "search_term",
@@ -117,21 +114,12 @@ def forward_geocode_unstructured(spark, tables: GeocoderTables, queries: DataFra
     return forward_geocode(spark, tables, split_address_cols(queries, expand=expand))
 
 
-def _top1_forward(cand: DataFrame, with_admin: bool) -> DataFrame:
+def _top1_forward(cand: DataFrame) -> DataFrame:
     """reverse._top1_per_query keyed for forward: row_number()==1 under
-    (distance asc NULLS LAST, trgm_dist asc, id asc[, a4_name asc NULLS LAST,
-    a6_name asc NULLS LAST]). NULLS LAST is encoded as
-    coalesce(distance, +inf) — planar distances are finite — and for the
-    admin-name tiebreaks as (isNull asc, coalesce(name, '') asc): false
-    sorts before true, so non-null names win, and tied nulls are disambiguated
-    only when the preceding unique-id key already ties (PIP-duplicated rows
-    of the SAME house), where the surviving columns are identical anyway."""
-    key = [F.coalesce(F.col("distance"), F.lit(float("inf"))),
-           F.col("trgm_dist"), F.col("id")]
-    if with_admin:
-        key += [F.col("a4_name").isNull(), F.coalesce(F.col("a4_name"), F.lit("")),
-                F.col("a6_name").isNull(), F.coalesce(F.col("a6_name"), F.lit(""))]
-    return _top1_per_query(cand, *key)
+    (distance asc NULLS LAST, trgm_dist asc, id asc). NULLS LAST is encoded
+    as coalesce(distance, +inf) — planar distances are finite."""
+    return _top1_per_query(cand, F.coalesce(F.col("distance"), F.lit(float("inf"))),
+                           F.col("trgm_dist"), F.col("id"))
 
 
 def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
@@ -139,18 +127,18 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
                     materialize: bool = True,
                     persist_registry: list | None = None,
                     scalar_limit: int | None = None) -> DataFrame:
-    """``batch_has_countries=False`` skips the eager driver-side country
-    prefetch (R1) when the caller KNOWS the batch carries no country terms
-    (e.g. mined pages build the column as a NULL literal) — the candidate
-    persist then materializes lazily inside the main job instead of in a
-    separate up-front collect.
+    """``batch_has_countries=False`` skips the country-term resolution join
+    when the caller KNOWS the batch carries no country terms (e.g. mined
+    pages build the column as a NULL literal); a row that does carry a term
+    then returns no rows.
 
     ``scalar_limit=1`` (caller contract: EVERY row's ``limit`` column equals
     1, as the mining pipeline guarantees by constructing it as a literal)
     replaces both ranking windows — the pre-rank over the full candidate set
-    and the final post-PIP ranking — with the map-side top-1 aggregate
-    ``_top1_forward``; result-identical (pytest-pinned equivalence), but the
-    full-candidate query_id shuffle+sort disappears.
+    and the final admin-extended ranking — with the map-side top-1
+    aggregate ``_top1_forward`` and the admin-name minima of the one
+    surviving house (reverse._admin_min); result-identical (pytest-pinned
+    equivalence), but the full-candidate query_id shuffle+sort disappears.
 
     ``materialize=False`` returns the LAZY plan (no eager checkpoint), so a
     composing caller can evaluate it concurrently with other work in one
@@ -225,9 +213,10 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
     # persist it so the trigram-candidate subplan runs once, not thrice (at
     # design scale the query batch is a materialized table anyway).
     cand = cand.persist()
-    cand_qs = cand  # persisted (query x street) candidates — country collect below reuses it
+    cand_qs = cand  # persisted (query x street) candidates
+    admin = ("a2_ids", "a4_names", "a6_names")
     houses = tables.houses.select(
-        F.col("id").alias("house_id"), "house_number", "x", "y", "street_id")
+        F.col("id").alias("house_id"), "house_number", "x", "y", "street_id", *admin)
     carry = [c for c in cand.columns
              if c not in ("query_id", "q_road", "q_hn", "street_id")]
 
@@ -271,7 +260,7 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
                        & F.col("country").isNull())
     cand_fast = (
         tables.houses_ranked.select(F.col("id").alias("house_id"),
-                                    "house_number", "x", "y", "street_id", "sr")
+                                    "house_number", "x", "y", "street_id", *admin, "sr")
         .join(fast.select("query_id", "street_id", *carry), "street_id")
         .filter(F.col("sr") <= F.col("limit")).drop("sr")
     )
@@ -289,47 +278,43 @@ def forward_geocode(spark, tables: GeocoderTables, queries: DataFrame,
             + (F.col("y") - F.col("cy")) * (F.col("y") - F.col("cy")))))
     cand = cand.filter(F.col("cx").isNull() | (F.col("distance") <= F.col("radius")))
 
-    # P4: country containment
+    # P4: country containment. Rows with NULL country pass; an unresolved
+    # term's NULL a2_id fails array_contains, as ST_Within against NULL does
     if batch_has_countries is False:
-        # caller promised a country-free batch (skipping the eager prefetch
-        # collect); make the promise fail-SAFE rather than silently wrong —
-        # any row that does carry a country term is dropped (the reference's
-        # ST_Within against an unresolved polygon also yields no rows), and
-        # the filter is a JVM no-op for correct callers
+        # caller promised a country-free batch (skipping the resolution
+        # join); make the promise fail-SAFE rather than silently wrong —
+        # any row that does carry a country term is dropped, and the filter
+        # is a JVM no-op for correct callers
         cand = cand.filter(F.col("country").isNull())
     else:
-        cand = _country_filter(spark, tables, cand, cand_qs)
+        # terms read from the persisted candidates, not the raw query plan,
+        # which may be an expensive page scan
+        cand = (cand.join(F.broadcast(_resolve_countries(tables, cand_qs)), "country", "left")
+                .filter(F.col("country").isNull()
+                        | F.array_contains(F.col("a2_ids"), F.col("a2_id"))))
 
-    # pre-rank houses to `limit` per query BEFORE the admin PIP join: the
-    # PIP left-join only duplicates rows of a house (it never reorders across
+    # pre-rank houses to `limit` per query BEFORE the admin decorate: the
+    # explode only duplicates rows of a house (it never reorders across
     # houses), so the final top-`limit` rows can only come from the
     # top-`limit` houses in this pre-admin ordering — provably identical
-    # results while bounding the PIP/window input to limit×queries rows
+    # results while bounding the explode/window input to limit×queries rows
     if scalar_limit == 1:
         # only the payload used after the aggregate rides through its
         # partial sort: the country/cx/cy/radius/limit columns are dead
         # here — the residual filters above consumed them
-        cand = _top1_forward(cand.select("query_id", "id", "street_id", "house_number",
-                                         "x", "y", "distance", "trgm_dist"),
-                             with_admin=False)
+        top = _admin_min(_top1_forward(cand.select(
+            "query_id", "id", "street_id", "house_number", "x", "y", "distance",
+            "trgm_dist", "a4_names", "a6_names")))
     else:
         pre_w = Window.partitionBy("query_id").orderBy(
             F.col("distance").asc_nulls_last(), F.col("trgm_dist").asc(), F.col("id").asc())
         cand = cand.withColumn("__pre", F.row_number().over(pre_w)) \
             .filter(F.col("__pre") <= F.col("limit")).drop("__pre")
-
-    # J3: admin_level 4/6 left PIP joins (before the final ranking —
-    # duplicates count toward LIMIT exactly as in the reference)
-    cand = _admin_cols(spark, tables, cand)
-
-    # O1 ranking: distance ASC NULLS LAST (§7.4.2), trigram distance, stable
-    # tiebreaks for reproducibility (§7.4.3c)
-    if scalar_limit == 1:
-        # the PIP left join may have duplicated the pre-ranked row (tiled
-        # overlapping polygons); top-1 again under the admin-extended key —
-        # exactly row_number()==1 of the window below at limit=1
-        top = _top1_forward(cand, with_admin=True)
-    else:
+        # J3: admin_level 4/6 left joins (before the final ranking —
+        # duplicates count toward LIMIT exactly as in the reference)
+        cand = _admin_cols(cand)
+        # O1 ranking: distance ASC NULLS LAST (§7.4.2), trigram distance,
+        # stable tiebreaks for reproducibility (§7.4.3c)
         w = Window.partitionBy("query_id").orderBy(
             F.col("distance").asc_nulls_last(), F.col("trgm_dist").asc(),
             F.col("id").asc(), F.col("a4_name").asc_nulls_last(), F.col("a6_name").asc_nulls_last())

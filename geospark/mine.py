@@ -129,8 +129,8 @@ def geocode_pages(spark, tables, pages: DataFrame,
     postcode, city, x, y)."""
     # ONE persisted pass over the pages extracts both candidate kinds: the
     # address regex runs only on pages passing the cheap anchor prefilter,
-    # and every downstream consumer (forward join, url join-back, country
-    # prefetch) reuses the persisted matches instead of re-running the scan
+    # and every downstream consumer (forward join, url join-back) reuses the
+    # persisted matches instead of re-running the scan
     # (Catalyst collapses projections, so even one plan evaluates the regex
     # multiple times per row without this barrier). Round-4 profiling
     # CORRECTED an earlier attribution: the scan itself is ~2 core-s at

@@ -8,8 +8,8 @@ top-k*:
   query point -> covering cells of its radius window (P3's 1-D band filter
   generalized to 2-D)  ->  equi-join with houses on cell_id  ->  exact
   planar-distance residual filter (F9)  ->  street/city dim joins (J1/J2)
-  ->  admin_level 4/6 containment via broadcast PIP with explode_outer
-  (J3, multiplicity preserved)  ->  row_number() over
+  ->  admin_level 4/6 containment from the houses' a4/a6 name arrays with
+  explode_outer (J3, multiplicity preserved)  ->  row_number() over
   (query ORDER BY distance) <= limit (J10/O2).
 
 The join side is houses (the 10^12-scale relation at design scale): it is
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from . import proj, spatial
+from . import proj
 from .etl import GRID_JOIN_RES
 from .tables import GeocoderTables
 
@@ -57,17 +57,21 @@ def _grid_expand(q: DataFrame, res: int = GRID_JOIN_RES,
             .drop("__ix0", "__ix1", "__iy0", "__iy1"))
 
 
-def _admin_cols(spark, tables: GeocoderTables, df: DataFrame) -> DataFrame:
-    """LEFT JOIN osm_admin a4/a6 ON ST_Contains (004:82-83): broadcast PIP,
-    explode_outer preserves both left rows and overlap multiplicity. Both
-    levels probe in ONE Arrow pass (multi_pip_match_col); the sequential
-    explodes reproduce the a4-matches x a6-matches join multiplicity."""
-    df = df.withColumn("__ad", spatial.multi_pip_match_col(
-        spark, {"a4": tables.prepared_admin(4), "a6": tables.prepared_admin(6)},
-        "x", "y"))
-    df = df.withColumn("a4_name", F.explode_outer("__ad.a4"))
-    df = df.withColumn("a6_name", F.explode_outer("__ad.a6")).drop("__ad")
-    return df
+def _admin_cols(df: DataFrame) -> DataFrame:
+    """LEFT JOIN osm_admin a4/a6 ON ST_Contains (004:82-83) over the houses'
+    a4/a6 name arrays: explode_outer preserves both left rows and overlap
+    multiplicity (a4-matches x a6-matches)."""
+    return (df.withColumn("a4_name", F.explode_outer("a4_names"))
+            .withColumn("a6_name", F.explode_outer("a6_names"))
+            .drop("a4_names", "a6_names"))
+
+
+def _admin_min(df: DataFrame) -> DataFrame:
+    """_admin_cols then row_number()==1 under (a4_name, a6_name asc NULLS
+    LAST), for one house per query: the least name of each array."""
+    return (df.withColumn("a4_name", F.array_min("a4_names"))
+            .withColumn("a6_name", F.array_min("a6_names"))
+            .drop("a4_names", "a6_names"))
 
 
 def reverse_geocode(spark, tables: GeocoderTables, queries: DataFrame,
@@ -128,7 +132,7 @@ def _reverse_projected(spark, tables: GeocoderTables, q: DataFrame,
     # kNN would otherwise silently treat NULL as a 32 m search window.
     q = q.filter(F.col("radius").isNotNull())
 
-    osm = _reverse_osm(spark, tables, q, scalar_limit).select(*RESULT_COLS)
+    osm = _reverse_osm(tables, q, scalar_limit).select(*RESULT_COLS)
     if not with_fallback or tables.oa is None:
         return osm
 
@@ -223,7 +227,7 @@ def _top1_per_query(cand: DataFrame, *key) -> DataFrame:
     return cand.groupBy("query_id").agg(best).select("query_id", "__best.*")
 
 
-def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
+def _reverse_osm(tables: GeocoderTables, q: DataFrame,
                  scalar_limit: int | None = None) -> DataFrame:
     # SKINNY candidate rows through every shuffle: only join/rank columns
     # (id, x, y, street_id, distance, ...) travel through the windows;
@@ -233,6 +237,7 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
     # and the decorate-after-top-k rewrite is exact). Measured: the fat rows
     # spilled 7.7 GB through the round-1 window at bench sf1.0.
     street_keys = tables.street_city.select("street_id")
+    houses = tables.houses.drop("a2_ids")
 
     # --- round 1: fine-grid probe within g1 = min(G1_METERS, radius) -------
     # complete-by-construction for distance <= g1, so a query whose round-1
@@ -242,7 +247,7 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
     # dangling street_id row must not count toward satisfaction.
     c1 = _candidates(
         q.withColumn("__r1", F.least(F.lit(G1_METERS), F.col("radius"))),
-        tables.houses, radius_col="__r1", res=G1_RES,
+        houses, radius_col="__r1", res=G1_RES,
     ).drop("__r1").join(F.broadcast(street_keys), "street_id", "left_semi")
 
     if scalar_limit == 1:
@@ -250,8 +255,8 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         # map-side-combinable aggregate, not a window over every candidate
         # row. With limit=1, EVERY query with a round-1 candidate is
         # satisfied (count >= 1 by construction of groupBy), so round 2 runs
-        # exactly for the round-1 misses with radius > g1, and the pre-rank
-        # below is a no-op (<=1 row per query per round, rounds disjoint) —
+        # exactly for the round-1 misses with radius > g1, and a pre-rank
+        # would be a no-op (<=1 row per query per round, rounds disjoint) —
         # both giant query_id exchanges (4.2 GB + 1.2 GB at bench sf4.0)
         # disappear; only per-(query, partition) partial rows shuffle.
         # Only the payload used after the aggregate rides through its
@@ -259,15 +264,16 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         # c1_keep to its GROUPING key, so that branch plans as a spill-free
         # hash distinct instead of a second full candidate sort (see
         # _top1_per_query).
-        payload = ("query_id", "id", "street_id", "house_number", "x", "y", "distance")
+        payload = ("query_id", "id", "street_id", "house_number", "x", "y", "distance",
+                   "a4_names", "a6_names")
         c1_keep = _top1_per_query(c1.select(*payload))
         sat_ids = c1_keep.select("query_id")
         q2 = q.filter(F.col("radius") > F.lit(G1_METERS)) \
             .join(sat_ids, "query_id", "left_anti")
         c2 = _top1_per_query(
-            _candidates(q2, tables.houses)
+            _candidates(q2, houses)
             .join(F.broadcast(street_keys), "street_id", "left_semi").select(*payload))
-        cand = c1_keep.unionByName(c2)
+        top = _admin_min(c1_keep.unionByName(c2))
     else:
         # ONE shuffle by query_id computes both the satisfaction count and
         # the per-query rank; rows are truncated to `limit` right here
@@ -291,30 +297,25 @@ def _reverse_osm(spark, tables: GeocoderTables, q: DataFrame,
         # round 1 could not complete
         sat_ids = c1.filter(F.col("__n1") >= F.col("limit")).select("query_id").distinct()
         q2 = q.filter(F.col("radius") > F.lit(G1_METERS)).join(sat_ids, "query_id", "left_anti")
-        c2 = _candidates(q2, tables.houses) \
+        c2 = _candidates(q2, houses) \
             .join(F.broadcast(street_keys), "street_id", "left_semi")
 
         cand = c1_keep.unionByName(c2)
-        # pre-rank to `limit` houses per query before the PIP join
+        # pre-rank to `limit` houses per query before the admin explode
         # (duplication by overlapping admin polygons never promotes a
         # lower-ranked house, so results are identical — see forward.py)
         pre_w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("id").asc())
         cand = cand.withColumn("__pre", F.row_number().over(pre_w)) \
             .filter(F.col("__pre") <= F.col("limit")).drop("__pre")
-    cand = _admin_cols(spark, tables, cand)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(),  # 004:88 ORDER BY ST_Distance
-        F.col("id").asc(), F.col("a4_name").asc_nulls_last(), F.col("a6_name").asc_nulls_last(),
-    )
-    # scalar mode: the caller asserts limit == 1 for every row (the same
-    # contract the top-1 aggregates rely on), and the top-1 payload no
-    # longer carries the constant column — compare against the literal.
-    limit_expr = F.lit(1) if scalar_limit == 1 else F.col("limit")
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("distance").asc(),  # 004:88 ORDER BY ST_Distance
+            F.col("id").asc(), F.col("a4_name").asc_nulls_last(), F.col("a6_name").asc_nulls_last(),
+        )
+        top = _admin_cols(cand).withColumn("__rn", F.row_number().over(w)) \
+            .filter(F.col("__rn") <= F.col("limit"))
     return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= limit_expr)
         # decorate the surviving top-k with street/city display attributes
-        .join(F.broadcast(tables.street_city.select(
+        top.join(F.broadcast(tables.street_city.select(
             "street_id", "road", "city_name", "postcode")), "street_id", "inner")
         .select(
             "query_id",

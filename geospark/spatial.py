@@ -116,10 +116,11 @@ def prepare_from_rows(rows, id_key="osm_id", attr_key="name", rings_key="rings")
 def multi_pip_match_col(spark, prepared_by_key: dict, x_col: str, y_col: str):
     """One Arrow pass matching the same (x, y) against SEVERAL prepared
     polygon sets: returns a struct column with one array<string> field per
-    key. The ETL's 004/005 fills and the geocoders' a4/a6 admin joins all
-    probe identical coordinates — a single kernel cuts the Arrow
+    key. The ETL's 004/005 fills and the houses' a2/a4/a6 arrays probe
+    identical coordinates — a single kernel cuts the Arrow
     (de)serialization of the point columns from len(keys) passes to one,
-    which at 10^9 rows is the dominant PIP cost."""
+    which at 10^9 rows is the dominant PIP cost. Set-up time only (ETL,
+    ``oa``, ``raster``): the geocoders run no PIP per query."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 

@@ -1,9 +1,9 @@
 """GeocoderTables — the engine's prepared reference-data bundle.
 
-Holds the struct tables (ETL output), the admin polygons (as broadcastable
-PreparedPolygons per admin_level), the pre-joined street->city dimension
-(J1/J2's small side), the trigram prefix indexes over distinct street names
-and house numbers (the "GIN trigram index" re-materialized as data,
+Holds the struct tables (ETL output), the houses with their admin
+membership arrays, the pre-joined street->city dimension (J1/J2's small
+side), the trigram prefix indexes over distinct street names, house numbers
+and country names (the "GIN trigram index" re-materialized as data,
 SURVEY.md X3), and optional OpenAddresses tables. Everything query
 functions need, built once.
 
@@ -169,17 +169,21 @@ def prefix_probe(terms: DataFrame, term: str, gram_df: DataFrame,
 
 class GeocoderTables:
     def __init__(self, spark: SparkSession, struct: dict, osm_admin: DataFrame,
-                 oa: dict | None = None, wordlist: DataFrame | None = None):
+                 oa: dict | None = None):
         self.spark = spark
-        # the geocoders' projection of struct_house, keyed by binary ids
+        # the geocoders' projection of struct_house, keyed by binary ids; the
+        # admin arrays are the ETL's one PIP of every house (etl 004/005):
+        # admin-2 osm_ids for the country filter, admin-4/6 names for the
+        # state/county decorate
         self.houses = struct["struct_house"].select(
             _binary_id("id").alias("id"), "house_number", "x", "y",
-            _binary_id("street_id").alias("street_id"), "ix", "iy")
+            _binary_id("street_id").alias("street_id"), "ix", "iy",
+            "a2_ids", "a4_names", "a6_names")
         self.streets = struct["struct_streets"]
         self.cities = struct["struct_cities"]
-        self.admin = osm_admin
         self.oa = oa
-        self.wordlist = wordlist
+        self._osm_admin = osm_admin
+        self._admin_polygons: dict[int, spatial.PreparedPolygons] = {}
 
         # J1 pre-joined: street -> city (inner, as in every geocode function);
         # city/postcode trigram arrays materialized once (GIN-as-data) so the
@@ -197,12 +201,18 @@ class GeocoderTables:
         )
 
         # X3: the GIN trigram indexes re-materialized as data, over DISTINCT
-        # street names and DISTINCT house-number strings — AllPairs prefix
-        # indexes (see trigram_prefix) that forward probes via prefix_probe
+        # street names, DISTINCT house-number strings and DISTINCT admin-2
+        # (country) names — AllPairs prefix indexes (see trigram_prefix)
+        # that forward probes via prefix_probe
         self.street_gram_df, self.street_name_prefix = trigram_prefix(
             self.streets.select("name"), "name")
         self.hn_gram_df, self.hn_value_prefix = trigram_prefix(
             self.houses.select(F.col("house_number").alias("hn")), "hn")
+        # forward resolves country terms to admin-2 osm_ids via country_ids
+        self.country_ids = osm_admin.filter(F.col("admin_level") == 2) \
+            .select("name", "osm_id")
+        self.country_gram_df, self.country_name_prefix = trigram_prefix(
+            self.country_ids, "name")
 
         # per-street rank of houses by id: for queries with NULL house_number
         # and NULL center/country the in-street ordering is (trgm_dist, id) —
@@ -213,56 +223,35 @@ class GeocoderTables:
         self.houses_ranked = self.houses.withColumn(
             "sr", F.row_number().over(_street_w))
 
-        # prepared admin polygons per level (broadcast PIP dimension) +
-        # countries for the J9 lookup — ONE dim-sized collect for all levels
-        # instead of four separate jobs
-        by_level: dict[int, list] = {}
-        for r in osm_admin.filter(F.col("admin_level").isin([2, 4, 6, 8])) \
-                .select("admin_level", "osm_id", "name", "rings").collect():
-            by_level.setdefault(r["admin_level"], []).append(r)
-        self._prepared = {lvl: spatial.prepare_from_rows(by_level.get(lvl, []))
-                          for lvl in (4, 6, 8)}
-        self.admin2_rows = [
-            {"osm_id": r["osm_id"], "name": r["name"], "rings": r["rings"]}
-            for r in by_level.get(2, [])
-        ]
-
         self.houses = self.houses.cache()
         self.street_city = self.street_city.cache()
         self.street_gram_df = self.street_gram_df.cache()
         self.street_name_prefix = self.street_name_prefix.cache()
         self.hn_gram_df = self.hn_gram_df.cache()
         self.hn_value_prefix = self.hn_value_prefix.cache()
+        self.country_ids = self.country_ids.cache()
+        self.country_gram_df = self.country_gram_df.cache()
+        self.country_name_prefix = self.country_name_prefix.cache()
         self.houses_ranked = self.houses_ranked.cache()
         # Eager materialization: every consumer touches all of these, and
         # the id checks of _binary_id run here, at build. Chains keep cache
-        # dependencies ordered (the prefix indexes join their own gram-df).
+        # dependencies ordered (the prefix indexes join their own gram-df);
+        # the country prefix's count alone fills the two caches it reads.
         _materialize([
             ("houses", (self.houses,)),
             ("street_city", (self.street_city,)),
             ("street_grams", (self.street_gram_df, self.street_name_prefix)),
             ("hn_grams", (self.hn_gram_df, self.hn_value_prefix)),
+            ("country_grams", (self.country_name_prefix,)),
             ("houses_ranked", (self.houses_ranked,)),
         ])
 
     def prepared_admin(self, level: int) -> spatial.PreparedPolygons:
-        return self._prepared[level]
-
-    def country_polygons(self, names) -> spatial.PreparedPolygons:
-        """_geocode_get_country_polygon (003-forward_geocoding.sql:6-14)
-        for a batch of country terms, as ONE prepared set: each term's
-        polygon is the trigram match of the term against admin_level-2
-        names. The reference returns an arbitrary matching row; we take
-        argmax(similarity) with (name, osm_id) tiebreak (§7.4.3b). Every
-        resolved polygon is entered once per term with the TERM as its
-        attr, so a point's match array lists exactly the terms whose
-        polygon contains it. A term that passes no name's % threshold adds
-        nothing (-> ST_Within against NULL -> no rows)."""
-        polys = []
-        for name in names:
-            hits = [(sim, r) for r in self.admin2_rows
-                    if (sim := text.similarity(r["name"], name)) >= text.TRGM_SIM_THRESHOLD]
-            if hits:
-                _, r = min(hits, key=lambda h: (-h[0], h[1]["name"], h[1]["osm_id"]))
-                polys.append((r["osm_id"], name, spatial.geometry.as_rings(r["rings"])))
-        return spatial.PreparedPolygons(polys)
+        """One level's admin polygons prepared for the broadcast PIP,
+        collected on first use: the independent check of the houses' admin
+        arrays (the geocoders run no PIP)."""
+        if level not in self._admin_polygons:
+            self._admin_polygons[level] = spatial.prepare_from_rows(
+                self._osm_admin.filter(F.col("admin_level") == level)
+                .select("osm_id", "name", "rings").collect())
+        return self._admin_polygons[level]

@@ -140,29 +140,31 @@ def test_reverse_scalar_limit1_agg_path_equivalence(spark, geo):
     key = ["query_id", "road", "house_number", "x", "y"]
     assert sorted(map(tuple, base_df.collect()), key=str) \
         == sorted(map(tuple, fast_df.collect()), key=str)
-    # structural pin: the fast path drops the per-candidate windows (round-1
-    # count+rank, pre-rank) — only the final admin-multiplicity window stays.
-    # Counted over per-query windows of the OSM-only plans: with the fallback
-    # the materialized OSM result hides them, and cached OA-table lineage
+    # structural pin: the fast path drops every per-query window (round-1
+    # count+rank, pre-rank, and the final admin-multiplicity ranking, which
+    # the least a4/a6 names of the one surviving house replace). Counted
+    # over per-query windows of the OSM-only plans: with the fallback the
+    # materialized OSM result hides them, and cached OA-table lineage
     # prints unrelated windows.
     def n_query_windows(**kw):
         df = reverse_geocode(spark, geo["tables"], rq, with_fallback=False, **kw)
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("windowspecdefinition(query_id")
 
-    assert n_query_windows(scalar_limit=1) < n_query_windows()
+    assert n_query_windows(scalar_limit=1) == 0 < n_query_windows()
 
 
 def test_forward_scalar_limit1_agg_path_equivalence(spark, geo):
     """Forward twin of the reverse test above: scalar_limit=1 replaces BOTH
     ranking windows (the pre-rank over the full candidate set and the final
-    post-PIP ranking) with map-side min_by top-1 aggregates. The pre-rank
+    admin-extended ranking) with a map-side min_by top-1 aggregate. The pre-rank
     window shuffled AND sorted every candidate row by query_id (profiled at
     bench sf4.0: twin 19-task Sort stages spilling ~12 GiB each). Exactness:
-    row_number()==1 under (distance asc NULLS LAST, trgm_dist, id[, a4/a6
-    names NULLS LAST]) == min_by on (coalesce(distance, inf), trgm_dist,
-    id[, isNull/coalesce-encoded names]); id is unique per house and ties
-    beyond it only for PIP-duplicated rows of the same house."""
+    row_number()==1 under (distance asc NULLS LAST, trgm_dist, id) == min_by
+    on (coalesce(distance, inf), trgm_dist, id), id unique per house; the
+    a4/a6 NULLS LAST tiebreaks of the window then only order the admin
+    duplicates of that one house, whose first row carries the least name
+    of each of its arrays."""
     from geospark.forward import forward_geocode
 
     fq = (spark.read.parquet("fixtures/fwd_queries.parquet")
@@ -315,7 +317,13 @@ def test_prefix_probe_matches_brute_force(spark, geo, kind):
 
 def test_admin_overlap_multiplicity(spark, geo):
     """Overlapping admin_level-6 polygons duplicate result rows exactly like
-    the reference's LEFT JOIN (§7.4.7) — never dedup."""
+    the reference's LEFT JOIN (§7.4.7) — never dedup. On the limit-1 paths
+    the duplicates of the winning house count toward LIMIT: the scalar
+    (top-1 aggregate) path returns exactly the window path's row."""
+    from geospark import proj
+    from geospark.forward import forward_geocode
+    from geospark.reverse import reverse_geocode
+
     rows = _fwd(spark, geo, road="Georgenstr", city="Amberg", limit=200).collect()
     west = [r for r in rows if r.x < 1037900.0]
     counties = {r.county for r in west}
@@ -324,6 +332,89 @@ def test_admin_overlap_multiplicity(spark, geo):
     from collections import Counter
     per_house = Counter((r.x, r.y) for r in west)
     assert set(per_house.values()) == {2}
+
+    # one western house, probed at its own coordinates with limit 1
+    h = min(west, key=lambda r: (r.x, r.y, r.house_number))
+    lon, lat = (float(v[0]) for v in proj.merc_to_lonlat([h.x], [h.y]))
+    fq = spark.createDataFrame(
+        [(1, "Georgenstr", h.house_number, None, "Amberg", None, lat, lon, 5, 1)],
+        "query_id long, road string, house_number string, postcode string, "
+        "city string, country string, center_lat double, center_lon double, "
+        "radius int, limit int")
+    rq = spark.createDataFrame([(1, lat, lon, 5.0, 1)],
+                               "query_id long, lat double, lon double, radius double, limit int")
+    fwd = {kw.get("scalar_limit"): forward_geocode(spark, geo["tables"], fq, **kw).collect()
+           for kw in ({}, {"scalar_limit": 1})}
+    rev = {kw.get("scalar_limit"): reverse_geocode(spark, geo["tables"], rq, **kw).collect()
+           for kw in ({}, {"scalar_limit": 1})}
+    for got in (fwd, rev):
+        assert got[1] == got[None]
+        assert [(r.x, r.y, r.county) for r in got[1]] == [(h.x, h.y, "Nordland County 1")]
+    # the same reverse probe with limit 2 returns that house once per county
+    two = reverse_geocode(spark, geo["tables"], rq.withColumn("limit", F.lit(2))).collect()
+    assert sorted((r.x, r.y, r.county) for r in two) == \
+        [(h.x, h.y, "Nordland County 1"), (h.x, h.y, "Overlap Special District")]
+
+
+def test_country_resolution_matches_similarity_argmax(spark, geo):
+    """forward resolves a batch's country terms in the JVM (the prefix join
+    over the admin-2 name index, then argmax of similarity): the same
+    admin-2 osm_id per term as the driver-side rule it replaces —
+    argmax(text.similarity) over every admin-2 row with similarity >= the
+    pg_trgm threshold, tiebreak (name, osm_id), no match for a term that
+    passes no name. The fixture's admin-2 table gains a duplicated name
+    under a second, smaller osm_id and near-duplicate names. Building the
+    plan of a batch with country terms runs no Spark job (no driver-side
+    collect)."""
+    from geospark import text
+    from geospark.forward import _resolve_countries, forward_geocode
+    from geospark.tables import GeocoderTables
+
+    admin = geo["osm"]["osm_admin"]
+    a2 = admin.filter(F.col("admin_level") == 2)
+    adressia = a2.filter(F.col("name") == "Adressia")
+    synth = a2.unionByName(
+        a2.filter(F.col("name") == "Osmland").withColumn("osm_id", F.lit(7).cast("long")))
+    for i, name in enumerate(["Adressian", "Nordmark", "Nordmarc"], 1):
+        synth = synth.unionByName(adressia.withColumn("osm_id", F.col("osm_id") + 1000 * i)
+                                  .withColumn("name", F.lit(name)))
+    t = GeocoderTables(spark, geo["struct"], admin.filter(F.col("admin_level") != 2)
+                       .unionByName(synth), oa=geo["tables"].oa)
+    admin2 = [(r.osm_id, r.name) for r in synth.collect()]
+
+    def old_rule(term):
+        hits = [(sim, name, oid) for oid, name in admin2
+                if (sim := text.similarity(name, term)) >= text.TRGM_SIM_THRESHOLD]
+        return min(hits, key=lambda h: (-h[0], h[1], h[2]))[2] if hits else None
+
+    terms = ["Adressia", "Adresia", "Adresian", "Osmland", "Osmlnd", "OSMLAND",
+             "Nordmar", "", "Xyzzyland"]
+    q = spark.createDataFrame([(x,) for x in terms] + [(None,)], "country string")
+    got = {r.country: r.a2_id for r in _resolve_countries(t, q).collect()}
+    want = {x: oid for x in terms if (oid := old_rule(x)) is not None}
+    assert got == want
+    # the cases bite: the duplicate name resolves to its smaller osm_id, a
+    # typo to the nearest of two near-duplicates, a term equally similar to
+    # two names to the lesser name, and two terms to none
+    ids = {name: oid for oid, name in admin2}
+    assert want["Osmland"] == want["OSMLAND"] == want["Osmlnd"] == 7
+    assert want["Adresia"] == ids["Adressia"] and want["Adresian"] == ids["Adressian"]
+    assert text.similarity("Nordmar", "Nordmark") == text.similarity("Nordmar", "Nordmarc")
+    assert want["Nordmar"] == ids["Nordmarc"]
+    assert "" not in want and "Xyzzyland" not in want
+
+    fq = spark.read.parquet("fixtures/fwd_queries.parquet")
+    assert fq.filter(F.col("country").isNotNull()).count() > 0
+    sc = spark.sparkContext
+    sc.setJobGroup("country-plan", "forward plan build")
+    persists: list = []
+    try:
+        forward_geocode(spark, t, fq, materialize=False, persist_registry=persists)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("country-plan")) == []
+    for cached in persists:
+        cached.unpersist()
 
 
 def test_predict_reference_demo(spark, geo):

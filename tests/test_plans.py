@@ -108,27 +108,27 @@ def test_reverse_plans_run_osm_knn_once(spark, geo):
     """Every reverse sub-result with two consumers is materialized once.
     Left lazy, the plan runs the round-1 candidate join once per consumer
     (kept rows, satisfied set) and, with the OA fallback, the whole OSM kNN
-    once more for the left-anti hit set: 7 grid-key joins and 2 admin PIPs
-    per call. Only the OA kNN may remain in the returned plan. The
-    scalar-limit-1 path (the mining pipeline's call) stays lazy, with its
-    3 grid-key joins."""
+    once more for the left-anti hit set: 7 grid-key joins per call. Only
+    the OA kNN may remain in the returned plan. The scalar-limit-1 path
+    (the mining pipeline's call) stays lazy, with its 3 grid-key joins.
+    Counted over the query's own nodes: the cached relations' build plans
+    are not the query's joins."""
     import re
 
     from geospark.reverse import reverse_geocode
 
-    def grid_joins(plan):
-        return len(re.findall(r"Join \[ix#", plan))
+    def grid_joins(df):
+        return len(re.findall(r"\(ix#\d+L? = ix#\d+L?\)", _own_nodes(df)))
 
     rq = spark.read.parquet("fixtures/rev_queries.parquet")
-    fb = _plan(reverse_geocode(spark, geo["tables"], rq))
+    fb = reverse_geocode(spark, geo["tables"], rq)
     assert grid_joins(fb) == 1
-    assert "_pip(" not in fb
-    assert grid_joins(_plan(reverse_geocode(spark, geo["tables"], rq,
-                                            with_fallback=False))) == 1
+    assert "_pip(" not in _own_nodes(fb)
+    assert grid_joins(reverse_geocode(spark, geo["tables"], rq,
+                                      with_fallback=False)) == 1
     rq1 = rq.withColumn("limit", F.lit(1))
-    assert grid_joins(_plan(reverse_geocode(spark, geo["tables"], rq1,
-                                            with_fallback=False,
-                                            scalar_limit=1))) == 3
+    assert grid_joins(reverse_geocode(spark, geo["tables"], rq1,
+                                      with_fallback=False, scalar_limit=1)) == 3
 
 
 def _own_nodes(df) -> str:
@@ -144,13 +144,66 @@ def _own_nodes(df) -> str:
     return "\n".join(walk(df._jdf.queryExecution().optimizedPlan()))
 
 
+def _pages_checkpoints(spark, geo, monkeypatch) -> list:
+    """The DataFrames geocode_pages checkpoints (it returns its eager
+    checkpoint, whose plan is a scan of the materialized rows)."""
+    from geospark import mine
+
+    pages = spark.read.parquet("fixtures/webpages.parquet").limit(200)
+    checkpointed = []
+    checkpoint = type(pages).localCheckpoint
+
+    def spy(df, eager=True):
+        checkpointed.append(df)
+        return checkpoint(df, eager)
+
+    monkeypatch.setattr(type(pages), "localCheckpoint", spy)
+    mine.geocode_pages(spark, geo["tables"], pages)
+    monkeypatch.undo()
+    assert checkpointed
+    return checkpointed
+
+
+def test_geocode_plans_run_no_query_time_pip(spark, geo, monkeypatch):
+    """Admin membership is house data (the ETL's one PIP of every house):
+    no geocoder plan runs a Python point-in-polygon per query — no
+    ArrowEvalPython and no _pip( among the query's own nodes of reverse
+    (window and scalar, with and without the OA fallback), forward (window
+    and scalar, with and without country terms) and what geocode_pages
+    checkpoints. The ETL's PIP sits behind the cached relations."""
+    from geospark.forward import forward_geocode
+    from geospark.reverse import reverse_geocode
+
+    t = geo["tables"]
+    rq = spark.read.parquet("fixtures/rev_queries.parquet")
+    rq1 = rq.withColumn("limit", F.lit(1))
+    plans = [reverse_geocode(spark, t, q, with_fallback=fb, scalar_limit=lim)
+             for fb in (True, False)
+             for q, lim in ((rq, None), (rq1, 1))]
+
+    fq = spark.read.parquet("fixtures/fwd_queries.parquet")
+    assert fq.filter(F.col("country").isNotNull()).count() > 0
+    persists: list = []
+    for q in (fq, fq.withColumn("country", F.lit(None).cast("string"))):
+        plans.append(forward_geocode(spark, t, q, materialize=False,
+                                     persist_registry=persists))
+        plans.append(forward_geocode(spark, t, q.withColumn("limit", F.lit(1)),
+                                     materialize=False, persist_registry=persists,
+                                     scalar_limit=1))
+    plans += _pages_checkpoints(spark, geo, monkeypatch)
+    for df in plans:
+        nodes = _own_nodes(df)
+        assert "ArrowEvalPython" not in nodes and "_pip(" not in nodes
+    for cached in persists:
+        cached.unpersist()
+
+
 def test_geocode_plans_carry_no_hex_conversion(spark, geo, monkeypatch):
     """GeocoderTables converts the hex ids to BINARY(32) once, at build, so
     no geocoder plan converts ids between hex and binary per query: no
     unhex( or hex( in the plans of reverse, forward and geocode_pages,
     top-1 (scalar_limit=1) paths included. The build's own conversion sits
     behind the cached relations these plans scan."""
-    from geospark import mine
     from geospark.forward import forward_geocode
     from geospark.reverse import reverse_geocode
 
@@ -173,18 +226,7 @@ def test_geocode_plans_carry_no_hex_conversion(spark, geo, monkeypatch):
         cached.unpersist()
 
     # geocode_pages returns its eager checkpoint: pin what it checkpoints
-    pages = spark.read.parquet("fixtures/webpages.parquet").limit(200)
-    checkpointed = []
-    checkpoint = type(pages).localCheckpoint
-
-    def spy(df, eager=True):
-        checkpointed.append(df)
-        return checkpoint(df, eager)
-
-    monkeypatch.setattr(type(pages), "localCheckpoint", spy)
-    mine.geocode_pages(spark, geo["tables"], pages)
-    assert checkpointed
-    for df in checkpointed:
+    for df in _pages_checkpoints(spark, geo, monkeypatch):
         no_hex(df)
 
 
