@@ -230,7 +230,7 @@ def main():
     timed("raster_vectorize",
           lambda: raster_mod.vectorize(r15, 15, F.col("n") >= 5).count(), repeat=2)
     timed("raster_zonal",
-          lambda: raster_mod.zonal_stats(spark, r15, zones6, 15).count(), repeat=2)
+          lambda: raster_mod.zonal_stats(r15, zones6, 15).count(), repeat=2)
 
     media = spark.read.parquet(f"{FIXTURE_DIR}/media.parquet").cache()
     media.count()

@@ -14,8 +14,8 @@ Cell id layout (int64, always positive):
 At resolution r the world square [-L, L]^2 is a 2^r x 2^r grid; cell size is
 2L / 2^r meters (r=15 -> ~1223 m, r=16 -> ~611 m, r=20 -> ~38 m).
 
-All functions are NumPy-vectorized so they can run inside pandas UDFs over
-Arrow batches (no per-row Python).
+All functions are NumPy-vectorized. Spark plans use their JVM column twins
+(etl.grid_cols / cell_col_jvm / geohash_col_jvm); these are the reference.
 """
 
 from __future__ import annotations
@@ -117,17 +117,6 @@ def children(cell: int) -> np.ndarray:
     xs = np.array([cx, cx + 1, cx, cx + 1], dtype=np.int64)
     ys = np.array([cy, cy, cy + 1, cy + 1], dtype=np.int64)
     return encode_ij(xs, ys, r)
-
-
-def k_ring(cell: int, k: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance k of one cell (incl. itself)."""
-    res, ix, iy = decode(np.asarray([cell]))
-    r = int(res[0])
-    n = 1 << r
-    xs = np.arange(max(int(ix[0]) - k, 0), min(int(ix[0]) + k, n - 1) + 1)
-    ys = np.arange(max(int(iy[0]) - k, 0), min(int(iy[0]) + k, n - 1) + 1)
-    gx, gy = np.meshgrid(xs, ys)
-    return encode_ij(gx.ravel(), gy.ravel(), r)
 
 
 _GEOHASH32 = np.frombuffer(b"0123456789bcdefghjkmnpqrstuvwxyz", dtype=np.uint8)

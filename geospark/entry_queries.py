@@ -581,7 +581,7 @@ def q_oa_city(spark, sf_dir):
     stay hash-checked alongside the backfill. (empty marker ' ' — the
     importer's empty-field encoding; see oa.update_city_names_from_osm.)"""
     st = geo_state(spark)
-    filled = oa.update_city_names_from_osm(spark, st["oa"], st["osm"]["osm_admin"],
+    filled = oa.update_city_names_from_osm(st["oa"], st["osm"]["osm_admin"],
                                            empty_values=(" ",))
     final = oa.manual_city_name_updates({**st["oa"], "oa_city": filled})
     return final.select("id", "city", "district", "region", "postcode", "license_id")
@@ -894,7 +894,7 @@ def q_raster_zonal(spark, sf_dir):
 
     st = geo_state(spark)
     zones = st["osm"]["osm_admin"].filter(F.col("admin_level") == 6)
-    out = raster.zonal_stats(spark, _raster15(spark), zones, RASTER_RES)
+    out = raster.zonal_stats(_raster15(spark), zones, RASTER_RES)
     return out.select("zone", F.col("n_cells").cast("long").alias("n_cells"),
                       F.col("n_points").cast("long").alias("n_points"))
 

@@ -9,8 +9,9 @@ determinism fixes (SURVEY.md §7.4.3):
   * geometry backfill arbitrary-row wins (012/013) -> min(osm_id) winner.
 
 Every stage is a plain DataFrame expression: Catalyst gets the whole plan
-(column pruning + pushdown free); the only Python is the prepared-polygon PIP
-kernel and the centroid kernel, both Arrow-vectorized.
+(column pruning + pushdown free). The point-in-polygon fills are JVM
+equi-joins on grid cells (spatial.pip_match) and the centroid is a JVM
+shoelace, so the build runs no Python.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import warnings
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType
 
 from . import cells as cell_mod
 from . import proj, spatial
@@ -46,7 +47,7 @@ def _barrier(df: DataFrame) -> DataFrame:
     """Stage materialization point: in production each optimize stage commits
     a parquet snapshot (snapshots.Pipeline); locally localCheckpoint gives
     the same plan barrier. It also keeps the many downstream branches from
-    re-running the Arrow PIP kernels on every action."""
+    re-running the point-in-polygon joins on every action."""
     return df.localCheckpoint(eager=True)
 
 
@@ -74,17 +75,51 @@ def load_osm_tables(spark: SparkSession, fixture_dir: str) -> dict:
 
 
 def _centroid_cols(df: DataFrame, rings_col: str = "rings"):
-    """ST_Centroid over polygon rings (optimize/002:12) via the shoelace
-    kernel, Arrow-batched."""
-    from .geometry import as_rings, polygon_centroid
+    """ST_Centroid over polygon rings (optimize/002:12) as JVM columns cx/cy:
+    geometry.polygon_centroid bit for bit — the same shoelace terms, each
+    sum taken left to right from 0.0, holes subtracting, and the vertex mean
+    when the total area is zero."""
+    def ring_sums(ring):
+        # (sum cross, sum (x0+x1)*cross, sum (y0+y1)*cross) over the edges
+        def edge(acc, i):
+            x0, y0 = ring[i][0], ring[i][1]
+            x1, y1 = ring[i + 1][0], ring[i + 1][1]
+            cross = x0 * y1 - x1 * y0
+            return F.struct((acc["a"] + cross).alias("a"),
+                            (acc["x"] + (x0 + x1) * cross).alias("x"),
+                            (acc["y"] + (y0 + y1) * cross).alias("y"))
 
-    @F.pandas_udf(StructType([StructField("cx", DoubleType()), StructField("cy", DoubleType())]))
-    def _cent(rings: pd.Series) -> pd.DataFrame:
-        out = [polygon_centroid(as_rings(rr)) for rr in rings]
-        return pd.DataFrame(out, columns=["cx", "cy"])
+        zero = F.struct(*(F.lit(0.0).alias(f) for f in ("a", "x", "y")))
+        return F.aggregate(F.sequence(F.lit(0), F.size(ring) - 2), zero, edge)
 
-    return df.withColumn("__c", _cent(F.col(rings_col))).withColumn(
-        "cx", F.col("__c.cx")).withColumn("cy", F.col("__c.cy")).drop("__c")
+    def add_ring(acc, s):
+        a = s["a"] / F.lit(2.0)
+        # rings after the first subtract when wound like the running total
+        signed = F.when((acc["n"] > 0) & ((a > 0) == (acc["a"] > 0)), -a).otherwise(a)
+
+        def weighted(sc):
+            # a zero-area ring adds a signed zero: nothing
+            return F.when(a == 0, F.lit(0.0)).otherwise(signed * (sc / (F.lit(6.0) * a)))
+
+        return F.struct((acc["n"] + 1).alias("n"), (acc["a"] + signed).alias("a"),
+                        (acc["x"] + weighted(s["x"])).alias("x"),
+                        (acc["y"] + weighted(s["y"])).alias("y"))
+
+    def vertex_mean(k):
+        # every vertex but each ring's closing one
+        total = F.aggregate(F.col(rings_col), F.lit(0.0), lambda acc, r: F.aggregate(
+            F.slice(r, 1, F.size(r) - 1), acc, lambda t, p: t + p[k]))
+        count = F.aggregate(F.col(rings_col), F.lit(0), lambda n, r: n + F.size(r) - 1)
+        return total / count
+
+    zero = F.struct(F.lit(0).alias("n"), *(F.lit(0.0).alias(f) for f in ("a", "x", "y")))
+    c = F.aggregate(F.transform(rings_col, ring_sums), zero, add_ring)
+    return df.withColumn("__c", c).select(
+        "*",
+        F.when(F.col("__c.a") == 0, vertex_mean(0))
+        .otherwise(F.col("__c.x") / F.col("__c.a")).alias("cx"),
+        F.when(F.col("__c.a") == 0, vertex_mean(1))
+        .otherwise(F.col("__c.y") / F.col("__c.a")).alias("cy")).drop("__c")
 
 
 def cell_col(x_col, y_col, res: int = HOUSE_CELL_RES):
@@ -217,36 +252,21 @@ def build_struct_tables(spark: SparkSession, osm: dict,
         "osm_id", "city", "postcode", "street", "house_number", "x", "y",
     )
 
-    # ONE dimension-sized collect for every polygon family this build needs
-    # (postal for 002 + 004, admin 8/6 for 005, admin 6/4/2 for the houses'
-    # admin arrays): previously three separate collect jobs plus pip_join's
-    # internal fourth — four scheduler round-trips for a few hundred rows
-    # each (r6 serial-floor work, guide §1.2/§5: the driver should do almost
-    # no data work, and what it does should batch). Admin-2 matches are
-    # osm_ids (the country filter's key; names may repeat), the rest names.
-    poly_rows = (
-        postal.select(F.lit(0).alias("__lvl"), "osm_id",
-                      F.col("postcode").alias("__attr"), "rings")
-        .unionByName(
-            admin.filter(F.col("admin_level").isin([8, 6, 4, 2]))
-            .select(F.col("admin_level").alias("__lvl"), "osm_id",
-                    F.when(F.col("admin_level") == 2, F.col("osm_id").cast("string"))
-                    .otherwise(F.col("name")).alias("__attr"), "rings"))
-    ).collect()
-    by_lvl: dict[int, list] = {}
-    for r in poly_rows:
-        by_lvl.setdefault(r["__lvl"], []).append(r)
-    preps = {key: spatial.prepare_from_rows(by_lvl.get(lvl, []), attr_key="__attr")
-             for key, lvl in (("pc", 0), ("a8", 8), ("a6", 6), ("a4", 4), ("a2", 2))}
+    # every polygon family this build probes, tiled into grid cells (one
+    # small bbox aggregate; no ring reaches the driver): postal for 002 +
+    # 004, admin 8/6 for 005, admin 6/4/2 for the houses' admin arrays.
+    # Admin-2 matches are osm_ids (the country filter's key; names may
+    # repeat), the rest names.
+    families = {"pc": postal.select("osm_id", F.col("postcode").alias("attr"), "rings")}
+    for key, lvl in (("a8", 8), ("a6", 6), ("a4", 4), ("a2", 2)):
+        families[key] = admin.filter(F.col("admin_level") == lvl).select(
+            "osm_id", F.col("osm_id" if lvl == 2 else "name").alias("attr"), "rings")
+    poly_cells = spatial.polygon_cells(families)
 
     # --- 002: buildings with house numbers, centroid within postal polygon -
-    # (reuses the prepared postal polygons — the old pip_join call collected
-    # the postal table a second time)
-    bld = osm["osm_buildings"].filter(F.col("house_number") != "")
-    bld = _centroid_cols(bld)
-    bld_in_postal = bld.withColumn(
-        "__pippc", spatial.multi_pip_match_col(spark, {"pc": preps["pc"]}, "cx", "cy")
-    ).withColumn("p_postcode", F.explode("__pippc.pc")).drop("__pippc").select(
+    bld = _centroid_cols(osm["osm_buildings"].filter(F.col("house_number") != ""))
+    bld_in_postal = spatial.pip_match(bld, {"pc": poly_cells["pc"]}, "cx", "cy") \
+        .withColumn("p_postcode", F.explode("pc")).select(
         _id(F.lit("bld"), "osm_id", "p_postcode").alias("id"),
         "osm_id",
         F.lit("").alias("city"),
@@ -257,34 +277,32 @@ def build_struct_tables(spark: SparkSession, osm: dict,
     houses = houses.unionByName(bld_in_postal)
 
     # --- 004 + 005: fill postcode (postal PIP), then city from admin_level
-    # 8 then 6 — the probes share identical (x, y), so ONE Arrow pass
-    # computes all five match sets (multi_pip_match_col); the sequential
-    # UPDATE semantics live in the chained column expressions (each
-    # condition reads the PREVIOUS fill's output, exactly like the SQL
-    # UPDATE order; the match values themselves depend only on x/y).
+    # 8 then 6 — the match arrays depend only on (x, y), so one chain of
+    # joins computes all five; the sequential UPDATE semantics live in the
+    # chained column expressions (each condition reads the PREVIOUS fill's
+    # output, exactly like the SQL UPDATE order).
     # Reference UPDATEs take an arbitrary polygon on overlap; we take the
-    # min-osm_id winner (pip attrs are ordered by polygon id — §7.4.3).
+    # min-osm_id winner (match arrays are ordered by osm_id — §7.4.3).
     # Houses keep their full a2/a4/a6 match arrays: the geocoders read them
     # in place of the reference's per-query ST_Contains (004:82-83,
     # 003:112,260,405), and explode_outer restores the LEFT JOIN multiplicity.
-    houses = houses.withColumn(
-        "__pip", spatial.multi_pip_match_col(spark, preps, "x", "y"))
+    houses = spatial.pip_match(houses, poly_cells, "x", "y")
     houses = houses.withColumn(
         "postcode",
         F.when((F.col("city") == "") & (F.col("postcode") == "")
-               & F.get("__pip.pc", 0).isNotNull(),
-               F.get("__pip.pc", 0)).otherwise(F.col("postcode")))
+               & F.get("pc", 0).isNotNull(),
+               F.get("pc", 0)).otherwise(F.col("postcode")))
     for key in ("a8", "a6"):
         houses = houses.withColumn(
             "city",
             F.when((F.col("city") == "") & (F.col("postcode") != "")
-                   & F.get(f"__pip.{key}", 0).isNotNull(),
-                   F.get(f"__pip.{key}", 0)).otherwise(F.col("city")))
-    houses = houses.withColumn("a2_ids", F.col("__pip.a2").cast("array<bigint>")) \
-        .withColumn("a4_names", F.col("__pip.a4")) \
-        .withColumn("a6_names", F.col("__pip.a6")).drop("__pip")
+                   & F.get(key, 0).isNotNull(),
+                   F.get(key, 0)).otherwise(F.col("city")))
+    houses = houses.withColumn("a2_ids", F.col("a2").cast("array<bigint>")) \
+        .withColumn("a4_names", F.col("a4")) \
+        .withColumn("a6_names", F.col("a6")).drop(*families)
 
-    # stage barrier (see _barrier): freeze UDF-filled keys before hashing
+    # stage barrier (see _barrier): freeze the PIP-filled keys before hashing
     houses = _barrier(houses)
 
     # --- 006: extract cities (group + ST_Extent bbox agg) ------------------
@@ -433,7 +451,7 @@ def build_struct_tables(spark: SparkSession, osm: dict,
             steps = max(1, math.ceil(math.log(max(hot.values()) / hot_cell_rows, 4)))
             steps = min(steps, cell_mod.MAX_RES - hot_res)
             struct_house = _barrier(
-                tiling.adaptive_cells(spark, struct_house, hot, steps=steps))
+                tiling.adaptive_cells(struct_house, hot, steps=steps))
 
     struct_house = struct_house.repartitionByRange(n_parts, "cell_id", "id") \
         .sortWithinPartitions("cell_id", "geohash")

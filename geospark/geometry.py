@@ -4,8 +4,10 @@ Replaces the PostGIS calls the reference makes (ST_Contains/ST_Within,
 ST_Centroid, ST_Extent, ST_Distance, WKB wire format — SURVEY.md F8-F18).
 Polygons are represented as a list of rings; each ring is an (m, 2) float64
 array, first ring = outer shell, subsequent rings = holes (even-odd rule makes
-shell/hole orientation irrelevant). All kernels are vectorized over points so
-they run on Arrow batches inside pandas UDFs.
+shell/hole orientation irrelevant). The engine runs the JVM forms of the
+point-in-polygon test (spatial.pip_match) and the centroid
+(etl._centroid_cols); these kernels, vectorized over points, are the
+reference that tests and the fixture generator use.
 
 Boundary semantics: ``points_in_polygon`` uses the even-odd ray-casting rule
 with half-open edges ([y0, y1) crossings). Points exactly on a horizontal
@@ -69,17 +71,31 @@ def points_in_polygon(px, py, rings) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def _sum_left(v) -> float:
+    """Sum left to right from 0.0: the order of the JVM centroid
+    (etl._centroid_cols). np.sum agrees below 8 terms and goes pairwise
+    from there."""
+    s = 0.0
+    for t in np.asarray(v, dtype=np.float64).tolist():
+        s += t
+    return s
+
+
+def _vertex_mean(pts: np.ndarray):
+    return _sum_left(pts[:, 0]) / len(pts), _sum_left(pts[:, 1]) / len(pts)
+
+
 def ring_area_centroid(ring: np.ndarray):
     """Signed shoelace area and area-weighted centroid of one ring."""
     r = np.asarray(ring, dtype=np.float64)
     x0, y0 = r[:-1, 0], r[:-1, 1]
     x1, y1 = r[1:, 0], r[1:, 1]
     cross = x0 * y1 - x1 * y0
-    a = cross.sum() / 2.0
+    a = _sum_left(cross) / 2.0
     if a == 0.0:  # degenerate: fall back to vertex mean
-        return 0.0, float(r[:-1, 0].mean()), float(r[:-1, 1].mean())
-    cx = ((x0 + x1) * cross).sum() / (6.0 * a)
-    cy = ((y0 + y1) * cross).sum() / (6.0 * a)
+        return (0.0, *_vertex_mean(r[:-1]))
+    cx = _sum_left((x0 + x1) * cross) / (6.0 * a)
+    cy = _sum_left((y0 + y1) * cross) / (6.0 * a)
     return a, cx, cy
 
 
@@ -98,8 +114,7 @@ def polygon_centroid(rings):
         sx += a * cx
         sy += a * cy
     if total_a == 0.0:
-        pts = np.vstack([np.asarray(r)[:-1] for r in rings])
-        return float(pts[:, 0].mean()), float(pts[:, 1].mean())
+        return _vertex_mean(np.vstack([np.asarray(r, dtype=np.float64)[:-1] for r in rings]))
     return sx / total_a, sy / total_a
 
 
@@ -111,12 +126,6 @@ def rings_bbox(rings):
         float(pts[:, 0].max()),
         float(pts[:, 1].max()),
     )
-
-
-def bbox_intersects(a, b) -> bool:
-    """Interval-overlap test of two (xmin, ymin, xmax, ymax) boxes —
-    the ST_Intersects(extent, Box2D(g)) predicate of optimize/012-013."""
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
 
 
 # ---------------------------------------------------------------------------

@@ -169,7 +169,7 @@ def oa_address_data(oa: dict) -> DataFrame:
     )
 
 
-def update_city_names_from_osm(spark, oa: dict, admin: DataFrame,
+def update_city_names_from_osm(oa: dict, admin: DataFrame,
                                empty_values: tuple = ("",)) -> DataFrame:
     """optimize/017-update_city_names_from_osm.sql: for OA cities with an
     empty name, take the multipoint centroid of all their house locations
@@ -193,12 +193,11 @@ def update_city_names_from_osm(spark, oa: dict, admin: DataFrame,
         .join(oa_house.select(F.col("street_id").alias("sid"), "x", "y"), "sid")
         .groupBy("cid").agg(F.avg("x").alias("cx"), F.avg("y").alias("cy"))
     )
-    rows = admin.filter(F.col("admin_level") == 8).select("osm_id", "name", "rings").collect()
-    prep = spatial.prepare_from_rows(rows)
-    filled = centroids.withColumn(
-        "new_city", F.get(spatial.multi_pip_match_col(
-            spark, {"a8": prep}, "cx", "cy").getField("a8"), 0)
-    ).filter(F.col("new_city").isNotNull()).select("cid", "new_city")
+    a8 = spatial.polygon_cells({"a8": admin.filter(F.col("admin_level") == 8)
+                                .select("osm_id", F.col("name").alias("attr"), "rings")})
+    filled = spatial.pip_match(centroids, a8, "cx", "cy") \
+        .withColumn("new_city", F.get("a8", 0)) \
+        .filter(F.col("new_city").isNotNull()).select("cid", "new_city")
     return (
         oa_city.join(F.broadcast(filled), oa_city["id"] == filled["cid"], "left")
         .withColumn("city", F.coalesce("new_city", "city"))

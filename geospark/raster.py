@@ -17,8 +17,8 @@ op is a plain Catalyst plan over the same Morton grid the spatial joins use:
     arithmetic from (ix, iy) — no Python, no geometry lib.
   * ``zonal_stats``— vector -> raster interrogation: per-polygon
     aggregates of the raster cells whose CENTER falls inside the polygon
-    (the standard zonal-statistics contract), via the same broadcast
-    prepared-polygon PIP kernel the geocoders use.
+    (the standard zonal-statistics contract), via the ETL's JVM
+    point-in-polygon join (spatial.pip_match).
 
 Determinism: cell ids/coords are closed-form doubles shared with the DuckDB
 oracles (entry_queries: raster_density / raster_pool / raster_vectorize /
@@ -110,45 +110,23 @@ def vectorize(raster: DataFrame, res: int, predicate=None) -> DataFrame:
         .select("cell_id", "ix", "iy", "n", "xmin", "ymin", "xmax", "ymax", "rings")
 
 
-def zonal_stats(spark, raster: DataFrame, polys: DataFrame, res: int,
-                id_key: str = "osm_id", rings_key: str = "rings",
-                method: str = "broadcast", tile_res: int = 8) -> DataFrame:
+def zonal_stats(raster: DataFrame, polys: DataFrame, res: int,
+                id_key: str = "osm_id", rings_key: str = "rings") -> DataFrame:
     """Per-polygon aggregates of the raster cells whose CENTER lies inside
     the polygon: (zone id, n_cells, n_points). Overlapping zones each
-    receive the cell, like the reference's PIP join multiplicity.
+    receive the cell, like the reference's PIP join multiplicity. The
+    polygons are tiled into grid cells that the cell centers equi-join
+    (spatial.pip_match); the only other shuffle is the final zone groupBy."""
+    from . import spatial
 
-    ``method='broadcast'`` (default): polygons are dimension-sized —
-    broadcast prepared-geometry PIP, a narrow map over the raster; the only
-    shuffle is the final zone groupBy.
-
-    ``method='tiled'``: for polygon sets too large to broadcast — the
-    shuffle-based tiled PIP join (tiling.tiled_pip_join): polygons explode
-    to covering cells at ``tile_res``, the equi-join on tile pairs
-    candidates, and the vectorized per-polygon kernel verifies. Same
-    results, one extra shuffle; use when |polys| breaks the broadcast
-    budget."""
     size = cell_mod.cell_size(res)
     cx = (F.col("ix") + F.lit(0.5)) * F.lit(size) - F.lit(L)
     cy = (F.col("iy") + F.lit(0.5)) * F.lit(size) - F.lit(L)
     r = raster.withColumn("__cx", cx).withColumn("__cy", cy)
-
-    if method == "tiled":
-        from . import tiling
-
-        matched = tiling.tiled_pip_join(
-            spark, r.select("n", "__cx", "__cy"), polys, res=tile_res,
-            x_col="__cx", y_col="__cy", id_key=id_key, attr_key=id_key,
-            rings_key=rings_key, how="inner")
-        return (matched.groupBy(F.col("__pid").cast("string").alias("zone"))
-                .agg(F.count("*").alias("n_cells"), F.sum("n").alias("n_points")))
-
-    from . import spatial
-
-    rows = polys.select(id_key, rings_key).withColumn("__attr", F.col(id_key).cast("string")) \
-        .select(id_key, "__attr", rings_key).collect()
-    prep = spatial.prepare_from_rows(rows, id_key=id_key, attr_key="__attr",
-                                     rings_key=rings_key)
-    r = r.withColumn("zone", F.explode(
-        spatial.multi_pip_match_col(spark, {"zone": prep}, "__cx", "__cy").getField("zone")))
-    return (r.groupBy("zone")
+    zones = spatial.polygon_cells({"zone": polys.select(
+        F.col(id_key).alias("osm_id"), F.col(id_key).alias("attr"),
+        F.col(rings_key).alias("rings"))})
+    return (spatial.pip_match(r, zones, "__cx", "__cy")
+            .withColumn("zone", F.explode("zone"))
+            .groupBy("zone")
             .agg(F.count("*").alias("n_cells"), F.sum("n").alias("n_points")))

@@ -78,6 +78,42 @@ def test_building_houses_join_postal(spark, geo):
     assert bld.filter(F.col("house_number").cast("int") < 100).count() == 0
 
 
+def test_centroid_jvm_matches_kernel(spark):
+    """etl._centroid_cols equals geometry.polygon_centroid bit for bit:
+    rings of 5, 9 and 30 vertices (the NumPy sum would go pairwise from 8
+    terms), a holed polygon, and a zero-area ring (vertex-mean fallback)."""
+    import math
+    import random
+
+    import numpy as np
+
+    from geospark import etl, geometry
+
+    rng = random.Random(5)
+
+    def ring(n, cx, cy, r):
+        pts = [[cx + r * (0.6 + 0.4 * rng.random()) * math.cos(2 * math.pi * k / (n - 1)),
+                cy + r * (0.6 + 0.4 * rng.random()) * math.sin(2 * math.pi * k / (n - 1))]
+               for k in range(n - 1)]
+        return pts + [pts[0]]
+
+    polys = [[ring(n, 1.0e6 + 37.3 * i, 6.0e6 - 11.9 * i, 40.0 + i)]
+             for i, n in enumerate((5, 9, 30) * 5)]
+    polys.append([ring(9, 1.2e6, 6.1e6, 500.0), ring(5, 1.2e6 + 10.3, 6.1e6 - 20.7, 90.0)])
+    polys.append([[[1.0e6, 6.0e6], [1.0e6 + 3.0, 6.0e6], [1.0e6 + 9.0, 6.0e6],
+                   [1.0e6, 6.0e6]]])  # zero area
+    df = spark.createDataFrame([(i, p) for i, p in enumerate(polys)],
+                               "i long, rings array<array<array<double>>>")
+    got = {r.i: (r.cx, r.cy) for r in etl._centroid_cols(df).collect()}
+
+    def bits(v):
+        return np.float64(v).tobytes()
+
+    for i, p in enumerate(polys):
+        want = geometry.polygon_centroid(geometry.as_rings(p))
+        assert tuple(map(bits, got[i])) == tuple(map(bits, want)), (i, got[i], want)
+
+
 def test_wordlist_counts(spark, geo):
     """geocoder/001: word counts = street rows per city name + house rows per
     street name, summed across the union (A3/A4/U1)."""
@@ -281,13 +317,13 @@ def test_street_geometry_backfill(geo):
     assert s.filter("name = 'Feldweg' and geometry is not null").count() == 0
 
 
-def test_oa_city_name_backfill_017(spark, geo):
+def test_oa_city_name_backfill_017(geo):
     """optimize/017: the empty-named Lakeside OA source gets its city name
     from the admin_level-8 polygon containing its houses' centroid."""
     from geospark import oa as oamod
 
     filled = oamod.update_city_names_from_osm(
-        spark, geo["oa"], geo["osm"]["osm_admin"], empty_values=(" ",))
+        geo["oa"], geo["osm"]["osm_admin"], empty_values=(" ",))
     names = {r.postcode: r.city for r in filled.collect()}
     assert names["81669"] == "Lakeside"
     assert names["62704"] == "Springfield"  # untouched

@@ -46,10 +46,7 @@ def test_cell_parent_child():
     assert c in set(kids.tolist())
 
 
-def test_k_ring_and_covering():
-    c = int(cells.encode(np.array([0.0]), np.array([0.0]), 10)[0])
-    ring = cells.k_ring(c, 1)
-    assert len(ring) == 9 and c in set(ring.tolist())
+def test_covering_cells():
     size = cells.cell_size(10)
     cov = cells.covering_cells_bbox(
         np.array([-size * 0.4]), np.array([-size * 0.4]),
@@ -107,12 +104,6 @@ def test_centroid():
     assert abs(cx - 5.0) < 1e-12 and abs(cy - 5.0) < 1e-12
     cx, cy = geometry.polygon_centroid(HOLED)
     assert abs(cx - 5.0) < 1e-9 and abs(cy - 5.0) < 1e-9
-
-
-def test_bbox_intersects():
-    assert geometry.bbox_intersects((0, 0, 2, 2), (1, 1, 3, 3))
-    assert geometry.bbox_intersects((0, 0, 2, 2), (2, 2, 3, 3))  # touching counts
-    assert not geometry.bbox_intersects((0, 0, 2, 2), (2.1, 0, 3, 2))
 
 
 def test_wkb_roundtrip():

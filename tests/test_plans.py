@@ -59,10 +59,10 @@ def test_dedup_pair_generators_have_no_nested_loops(spark):
 
 
 def test_raster_plans_stay_jvm_and_narrow(spark, geo):
-    """rasterize/pool/vectorize must be pure-JVM plans (no Arrow/Python
-    eval — the grid keys and ring geometry are closed-form columns) with
-    hash aggregation (map-side combine), and zonal_stats must not
-    degenerate to a cartesian."""
+    """rasterize/pool/vectorize/zonal_stats must be pure-JVM plans (no
+    Arrow/Python eval — the grid keys, ring geometry and point-in-polygon
+    test are closed-form columns) with hash aggregation (map-side combine),
+    and zonal_stats must not degenerate to a cartesian."""
     from geospark import raster
 
     h = geo["struct"]["struct_house"]
@@ -78,8 +78,45 @@ def test_raster_plans_stay_jvm_and_narrow(spark, geo):
     assert "ArrowEvalPython" not in pv and "BatchEvalPython" not in pv
 
     zones = geo["osm"]["osm_admin"].filter(F.col("admin_level") == 6)
-    pz = _plan(raster.zonal_stats(spark, r, zones, 15))
+    pz = _plan(raster.zonal_stats(r, zones, 15))
     assert "CartesianProduct" not in pz
+    assert "ArrowEvalPython" not in pz and "BatchEvalPython" not in pz
+
+
+def test_setup_plans_run_no_python(spark, geo, monkeypatch):
+    """The OSM set-up runs no Python: the executed plans of every
+    build_struct_tables output, of every frame it checkpoints on the way
+    (the stage barriers hide the point-in-polygon joins and the centroid
+    from the outputs' plans), and of every GeocoderTables cache built
+    without OA hold no ArrowEvalPython/BatchEvalPython."""
+    from geospark import etl
+    from geospark.tables import GeocoderTables
+
+    osm = geo["osm"]
+    frames = []
+    checkpoint = type(osm["osm_admin"]).localCheckpoint
+
+    def spy(df, eager=True):
+        frames.append(df)
+        return checkpoint(df, eager)
+
+    monkeypatch.setattr(type(osm["osm_admin"]), "localCheckpoint", spy)
+    struct = etl.build_struct_tables(spark, osm)
+    monkeypatch.undo()
+    t = GeocoderTables(spark, struct, osm["osm_admin"])
+    frames += [*struct.values(), t.houses, t.street_city, t.street_gram_df,
+               t.street_name_prefix, t.hn_gram_df, t.hn_value_prefix,
+               t.country_ids, t.country_gram_df, t.country_name_prefix,
+               t.houses_ranked]
+    assert len(frames) > len(struct) + 10
+    for df in frames:
+        plan = _plan(df)
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    for df in (*struct.values(), t.houses, t.street_city, t.street_gram_df,
+               t.street_name_prefix, t.hn_gram_df, t.hn_value_prefix,
+               t.country_ids, t.country_gram_df, t.country_name_prefix,
+               t.houses_ranked):
+        df.unpersist()
 
 
 def test_geocode_join_paths_have_no_cartesian(spark, geo):

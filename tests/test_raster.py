@@ -67,27 +67,42 @@ def test_vectorize_rings_are_cell_bounds(spark, geo):
     assert points_in_polygon(np.array([cx]), np.array([cy]), as_rings(row.rings))[0]
 
 
-def test_zonal_stats_tiled_equals_broadcast(spark, geo):
-    """The shuffle-based path (polygon sets beyond broadcast size) must
-    produce identical zonal aggregates to the broadcast prepared-geometry
-    path."""
+def test_zonal_stats_tiled_equals_broadcast(geo):
+    """zonal_stats equals a PreparedPolygons reference computed here: the
+    raster cells whose center lies in each zone, counted and summed."""
+    import numpy as np
+
+    from geospark import cells, spatial
+    from geospark.proj import L
+
     zones = geo["osm"]["osm_admin"].filter(F.col("admin_level") == 6)
     r = raster.rasterize(geo["struct"]["struct_house"], 15)
-    bc = {(row.zone, row.n_cells, row.n_points)
-          for row in raster.zonal_stats(spark, r, zones, 15).collect()}
-    tl = {(row.zone, row.n_cells, row.n_points)
-          for row in raster.zonal_stats(spark, r, zones, 15, method="tiled").collect()}
-    assert bc == tl and bc
+    got = {(row.zone, row.n_cells, row.n_points)
+           for row in raster.zonal_stats(r, zones, 15).collect()}
+
+    prep = spatial.prepare_from_rows(
+        zones.select("osm_id", F.col("osm_id").cast("string").alias("zone"), "rings")
+        .collect(), attr_key="zone")
+    cells15 = r.select("ix", "iy", "n").collect()
+    size = cells.cell_size(15)
+    cx = (np.array([c.ix for c in cells15]) + 0.5) * size - L
+    cy = (np.array([c.iy for c in cells15]) + 0.5) * size - L
+    want: dict = {}
+    for c, matched in zip(cells15, prep.match(cx, cy)):
+        for zone in matched:
+            n_cells, n_points = want.get(zone, (0, 0))
+            want[zone] = (n_cells + 1, n_points + c.n)
+    assert got == {(z, nc, npts) for z, (nc, npts) in want.items()} and got
 
 
-def test_zonal_stats_multiplicity_and_totals(spark, geo):
+def test_zonal_stats_multiplicity_and_totals(geo):
     """Overlapping zones each receive the cell (reference PIP-join
     multiplicity): the fixture's Overlap Special District (level 6) overlaps
     Nordland County 1, so their shared cells count in BOTH zones."""
     zones = geo["osm"]["osm_admin"].filter(F.col("admin_level") == 6)
     r = raster.rasterize(geo["struct"]["struct_house"], 15)
     out = {row.zone: (row.n_cells, row.n_points)
-           for row in raster.zonal_stats(spark, r, zones, 15).collect()}
+           for row in raster.zonal_stats(r, zones, 15).collect()}
     assert len(out) >= 8  # all 8 counties hold houses
     # zone ids are polygon osm_ids as strings
     valid = {str(row.osm_id) for row in zones.select("osm_id").collect()}

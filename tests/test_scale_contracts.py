@@ -88,8 +88,7 @@ def test_cell_col_jvm_matches_arrow_kernel(spark):
     rows = [(i, rng.uniform(-L, L), rng.uniform(-L, L)) for i in range(2000)]
     rows += [(9001, -L, -L), (9002, L, L), (9003, 0.0, 0.0), (9004, L - 1e-6, -L)]
     df = spark.createDataFrame(rows, "i long, x double, y double")
-    # the house-table res 15, and the res 6 and 8 tiling.tiled_pip_join is
-    # called with (raster.zonal_stats defaults tile_res to 8)
+    # the house-table res 15, and two coarse polygon-family resolutions
     for res in (15, 6, 8):
         out = df.select(
             etl.cell_col(F.col("x"), F.col("y"), res).alias("kernel"),
