@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import cells as cell_mod
+from . import spatial
 from .etl import grid_cols, morton_cell_col
 from .proj import L
 
@@ -117,8 +118,6 @@ def zonal_stats(raster: DataFrame, polys: DataFrame, res: int,
     receive the cell, like the reference's PIP join multiplicity. The
     polygons are tiled into grid cells that the cell centers equi-join
     (spatial.pip_match); the only other shuffle is the final zone groupBy."""
-    from . import spatial
-
     size = cell_mod.cell_size(res)
     cx = (F.col("ix") + F.lit(0.5)) * F.lit(size) - F.lit(L)
     cy = (F.col("iy") + F.lit(0.5)) * F.lit(size) - F.lit(L)

@@ -104,18 +104,15 @@ def test_setup_plans_run_no_python(spark, geo, monkeypatch):
     struct = etl.build_struct_tables(spark, osm)
     monkeypatch.undo()
     t = GeocoderTables(spark, struct, osm["osm_admin"])
-    frames += [*struct.values(), t.houses, t.street_city, t.street_gram_df,
-               t.street_name_prefix, t.hn_gram_df, t.hn_value_prefix,
-               t.country_ids, t.country_gram_df, t.country_name_prefix,
-               t.houses_ranked]
-    assert len(frames) > len(struct) + 10
-    for df in frames:
+    caches = [*struct.values(), t.houses, t.street_city, t.street_gram_df,
+              t.street_name_prefix, t.hn_gram_df, t.hn_value_prefix,
+              t.country_ids, t.country_gram_df, t.country_name_prefix,
+              t.houses_ranked]
+    assert len(frames) > 2
+    for df in frames + caches:
         plan = _plan(df)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-    for df in (*struct.values(), t.houses, t.street_city, t.street_gram_df,
-               t.street_name_prefix, t.hn_gram_df, t.hn_value_prefix,
-               t.country_ids, t.country_gram_df, t.country_name_prefix,
-               t.houses_ranked):
+    for df in caches:
         df.unpersist()
 
 
